@@ -17,6 +17,7 @@ fully lazy/pipelined.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass, field
@@ -38,6 +39,8 @@ from lsh_qd_spark.operators.verify import verify_pairs, verify_pairs_text
 
 STAGES = ["shingles", "signatures", "buckets", "pairs", "verified", "clusters"]
 _MULTI_CONSUMER_STAGES = {"shingles", "buckets", "pairs", "verified"}
+
+log = logging.getLogger(__name__)
 
 
 def _parse_bytes(v: str) -> int:
@@ -77,7 +80,8 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     footer's row-group count caps them (a 1-row-group file yields ONE
     task regardless of byte ranges). Non-local or non-file-backed plans
     (catalog tables, in-memory test frames) are returned unchanged —
-    conservative, never fatal.
+    conservative, never fatal: a failed estimate is logged as a warning
+    and the input is returned as is.
 
     ``SPARK_GRAFT_SPREAD_SMALL_INPUT=0`` disables the rescue — used by
     plan_audit.py so BENCH/PLANS.md keeps pinning the AT-SCALE plan shape
@@ -115,8 +119,12 @@ def spread_small_input(df: DataFrame) -> DataFrame:
                         est,
                         _pq.ParquetFile(path).metadata.num_row_groups or 1,
                     )
-                except Exception:  # noqa: BLE001 — estimate stays bytes-based
-                    pass
+                except Exception as e:  # noqa: BLE001 — estimate stays bytes-based
+                    log.warning(
+                        "spread_small_input: row groups of %s unreadable: %r",
+                        path,
+                        e,
+                    )
             splits += est
             if splits >= n:
                 return df
@@ -124,7 +132,8 @@ def spread_small_input(df: DataFrame) -> DataFrame:
         if target <= splits:
             return df
         return df.repartition(target)
-    except Exception:  # noqa: BLE001 — planning-only helper, never fatal
+    except Exception as e:  # noqa: BLE001 — planning-only helper, never fatal
+        log.warning("spread_small_input: input left as is: %r", e)
         return df
 
 

@@ -11,8 +11,7 @@ cross-JVM shuffle serialization of every intermediate schema, and
 broadcast of the driver-built config into foreign processes.
 
 The local-cluster leg runs in a subprocess because one python process
-cannot host two SparkContexts with different masters; the bench harness
-launches its cluster legs the same way (bench.py ``--cluster-worker``).
+cannot host two SparkContexts with different masters.
 """
 
 import json
@@ -27,13 +26,32 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_DOCS = 800
 
 _CHILD = """
-import json, sys
+import json, os, sys, zipfile
 sys.path.insert(0, {repo!r})
-from bench import _session_cluster
-from lsh_qd_spark.config import DedupConfig
+from lsh_qd_spark.config import DedupConfig, RuntimeConfig
 from lsh_qd_spark.plans.pipeline import DedupPipeline
+from lsh_qd_spark.session import get_spark
 
-spark = _session_cluster(2, 2, 1024)
+# the package as a py-files zip, the programmatic twin of
+# `zip -qr pkg.zip lsh_qd_spark` + spark-submit --py-files; package data
+# (e.g. data/lang_profiles.json) ships too
+with zipfile.ZipFile({zip_path!r}, "w") as z:
+    for root, dirs, files in os.walk(os.path.join({repo!r}, "lsh_qd_spark")):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for fn in files:
+            if not fn.endswith((".pyc", ".pyo")):
+                full = os.path.join(root, fn)
+                z.write(full, os.path.relpath(full, {repo!r}))
+
+spark = get_spark(
+    app_name="cluster_sim",
+    master="local-cluster[2,2,1024]",
+    runtime=RuntimeConfig(
+        shuffle_partitions=8,
+        extra_confs={{"spark.executor.memory": "1024m"}},
+    ),
+)
+spark.sparkContext.addPyFile({zip_path!r})
 pages = spark.read.parquet({corpus!r})
 out = DedupPipeline(DedupConfig(**json.loads({cfg!r}))).run(pages)
 pairs = sorted(
@@ -83,11 +101,16 @@ def _local_result(spark, corpus_path):
     return {"pairs": pairs, "clusters": clusters}
 
 
-def test_multi_executor_parity(spark, corpus_path):
+def test_multi_executor_parity(spark, corpus_path, tmp_path):
     expected = _local_result(spark, corpus_path)
     assert expected["pairs"], "fixture must plant duplicates"
 
-    script = _CHILD.format(repo=REPO, corpus=corpus_path, cfg=json.dumps(CFG))
+    script = _CHILD.format(
+        repo=REPO,
+        corpus=corpus_path,
+        cfg=json.dumps(CFG),
+        zip_path=str(tmp_path / "lsh_qd_spark.zip"),
+    )
     proc = subprocess.run(
         [sys.executable, "-c", script],
         capture_output=True,

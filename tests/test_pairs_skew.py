@@ -69,7 +69,7 @@ def test_star_edges_connect_mega_bucket(spark):
 def test_duplicate_bucket_rows_no_self_pairs(spark):
     """Dirty input: the same doc_id appearing twice in a bucket must not
     emit (d, d) self-pairs nor double-count n_bands (collect_set, not
-    collect_list, in the two-phase member aggregation)."""
+    collect_list, in the member aggregation)."""
     rows = [
         (1, 0, "k"), (1, 0, "k"),           # doc 1 duplicated in band 0
         (2, 0, "k"),
@@ -78,17 +78,12 @@ def test_duplicate_bucket_rows_no_self_pairs(spark):
     buckets = spark.createDataFrame(
         rows, "doc_id long, band_idx int, band_key string"
     )
-    for two_phase in (True, False):
-        out = candidate_pairs(
-            buckets, alpha=1, max_bucket_size=10, two_phase=two_phase
-        ).collect()
-        got = {(r.id_a, r.id_b): r.n_bands for r in out}
-        assert got == {(1, 2): 2}, f"two_phase={two_phase}: {got}"
-        # alpha=2 must also hold exactly (no inflation past the real count)
-        out2 = candidate_pairs(
-            buckets, alpha=3, max_bucket_size=10, two_phase=two_phase
-        ).collect()
-        assert out2 == []
+    out = candidate_pairs(buckets, alpha=1, max_bucket_size=10).collect()
+    got = {(r.id_a, r.id_b): r.n_bands for r in out}
+    assert got == {(1, 2): 2}, got
+    # alpha=3 must also hold exactly (no inflation past the real count)
+    out2 = candidate_pairs(buckets, alpha=3, max_bucket_size=10).collect()
+    assert out2 == []
 
 
 def test_alpha_tiers_keep_star_edges(spark):

@@ -12,9 +12,8 @@ fails loudly if a refactor silently undoes it:
   flip oracle hashes).
 """
 
-import os
+import logging
 
-import pytest
 from pyspark.sql import functions as F
 
 from lsh_qd_spark.config import DedupConfig
@@ -60,6 +59,20 @@ def test_spread_kill_switch(spark, tmp_path, monkeypatch):
     df = spark.read.parquet(p)
     monkeypatch.setenv("SPARK_GRAFT_SPREAD_SMALL_INPUT", "0")
     assert spread_small_input(df) is df
+
+
+def test_spread_logs_failed_estimate_and_keeps_input(spark, monkeypatch, caplog):
+    df = spark.range(0, 10)
+
+    def boom():
+        raise RuntimeError("no file listing")
+
+    monkeypatch.setattr(df, "inputFiles", boom)
+    with caplog.at_level(logging.WARNING, logger="lsh_qd_spark.plans.pipeline"):
+        assert spread_small_input(df) is df
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "no file listing" in warnings[0].getMessage()
 
 
 def test_spread_leaves_in_memory_frames_alone(spark):
@@ -145,30 +158,3 @@ def test_cosine_from_norms_bit_identical(spark):
         else:
             # exact bit equality, not approx
             assert r["inline"] == r["pre"]
-
-
-def test_warm_session_is_idempotent_and_gated(monkeypatch):
-    from lsh_qd_spark import session as sess
-
-    calls = []
-    monkeypatch.setattr(sess, "_warm_session", lambda s: calls.append(1))
-    monkeypatch.setenv("SPARK_GRAFT_SESSION_WARMUP", "0")
-    # gated off: get_spark must not warm
-    s = sess.get_spark(app_name="warm_gate_test")
-    assert calls == []
-    monkeypatch.delenv("SPARK_GRAFT_SESSION_WARMUP")
-    s2 = sess.get_spark(app_name="warm_gate_test")
-    assert calls == [1]
-    assert s is s2  # same session either way
-
-
-@pytest.mark.skipif(
-    os.environ.get("SPARK_GRAFT_SESSION_WARMUP") == "0",
-    reason="warm-up disabled in this environment",
-)
-def test_warmed_registry_prevents_rewarm(spark):
-    from lsh_qd_spark.session import _WARMED, _warm_session
-
-    app = spark.sparkContext.applicationId
-    _warm_session(spark)  # idempotent: registry short-circuits
-    assert app in _WARMED

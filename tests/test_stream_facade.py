@@ -218,3 +218,28 @@ def test_save_progress_writes_query_telemetry(spark, tmp_path):
         for p in progress
         for op in p.get("stateOperators", [])
     )
+
+
+def test_save_progress_merges_ring_buffer(tmp_path):
+    """recentProgress is a capped ring buffer; repeated save_progress calls
+    must accumulate batches keyed by batchId, not truncate to the tail."""
+    import json
+
+    from lsh_qd_spark.streaming.facade import save_progress
+
+    class _P:
+        def __init__(self, batch_id, rows):
+            self.json = json.dumps({"batchId": batch_id, "numInputRows": rows})
+
+    class _Q:
+        def __init__(self, progress):
+            self.recentProgress = progress
+
+    work = str(tmp_path)
+    save_progress(_Q([_P(0, 10), _P(1, 20)]), work)
+    # second call: ring buffer rolled — batch 0 gone, batch 1 updated, 2 new
+    path = save_progress(_Q([_P(1, 20), _P(2, 30)]), work)
+    with open(path) as f:
+        got = json.load(f)
+    assert [p["batchId"] for p in got] == [0, 1, 2]
+    assert sum(p["numInputRows"] for p in got) == 60
