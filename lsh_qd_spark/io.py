@@ -37,15 +37,7 @@ def iceberg_catalogs(spark: SparkSession) -> list[str]:
     ``spark.conf.set(...)`` are valid (they resolve lazily) but never
     appear in the static SparkConf."""
     out = []
-    try:
-        it = spark._jsparkSession.conf().getAll().iterator()
-        entries = []
-        while it.hasNext():
-            e = it.next()
-            entries.append((e._1(), e._2()))
-    except Exception:  # pragma: no cover - py4j surface drift
-        entries = list(spark.sparkContext.getConf().getAll())
-    for k, v in entries:
+    for k, v in spark.conf.getAll.items():
         parts = k.split(".")
         if (
             k.startswith("spark.sql.catalog.")

@@ -5,18 +5,18 @@ feature-extraction are Arrow-batched ``mapInPandas`` kernels.
 
 Decode is REAL for codec-free formats: PPM/PGM/BMP images, zlib-
 compressed PNG (``decode_png`` — pure stdlib inflate + full filter-set
-unfilter, every legal bit depth, palette, Adam7), baseline JPEG
-(``decode_jpeg`` — pure NumPy Huffman + IDCT, 4:2:0/4:4:4, restart
-markers), and PCM WAV audio all decode with pure NumPy/stdlib, and
-feature extraction is real too — 8×8 block-mean luminance (the classic
-aHash-style perceptual embedding) for images, per-window RMS energy +
-zero-crossing rate for audio. Formats that need external codecs
-(ffmpeg/mp3/video) are STUBBED behind the same interface:
-``decode_fn=None`` raises ``NotImplementedError`` eagerly; production
-passes ``PIL.Image.open`` / ``soundfile.read`` there. The dedup path
-downstream of decode is fully real either way: features →
-hyperplane-LSH buckets → candidate pairs → cosine verify
-(operators/ann.py), identical to the text path's shape.
+unfilter, every legal bit depth, palette, Adam7) and PCM WAV audio all
+decode with pure NumPy/stdlib; ``image_feature_decoder`` dispatches the
+image formats on magic bytes. Feature extraction is real too — 8×8
+block-mean luminance (the classic aHash-style perceptual embedding) for
+images, per-window RMS energy + zero-crossing rate for audio. Formats
+that need external codecs (JPEG/GIF, mp3/video) go through the
+runtime-detected adapters ``pil_feature_decoder`` /
+``soundfile_feature_decoder``; without the codec they raise
+``NotImplementedError`` eagerly (``require_decoder``), as does
+``decode_fn=None``. The dedup path downstream of decode is the same
+either way: features → hyperplane-LSH buckets → candidate pairs → cosine
+verify (operators/ann.py), identical to the text path's shape.
 """
 
 from __future__ import annotations
@@ -37,14 +37,14 @@ FEATURE_SCHEMA = "media_id long, feature array<float>, feat_dim int"
 
 
 def require_decoder(kind: str) -> Callable[[bytes], np.ndarray]:
-    """Codec-dependent formats (mp3/video) need ffmpeg/soundfile — absent
-    in this environment by design. PPM/PGM/BMP/PNG/JPEG/WAV decode IS
-    available codec-free: ``*_feature_decoder``."""
+    """Codec-dependent formats (JPEG/GIF/mp3/video) need PIL, soundfile or
+    ffmpeg. PPM/PGM/BMP/PNG/WAV decode is available codec-free:
+    ``image_feature_decoder`` / ``wav_feature_decoder``."""
     raise NotImplementedError(
-        f"no {kind} codec in this environment; pass decode_fn= explicitly "
-        "(production: PIL.Image.open / soundfile.read / frame sampler; "
-        "codec-free: ppm/pgm/bmp/png/jpeg_feature_decoder() / "
-        "wav_feature_decoder())"
+        f"no {kind} codec in this module; pass decode_fn= explicitly "
+        "(JPEG/GIF/WebP: pil_feature_decoder(); FLAC/OGG: "
+        "soundfile_feature_decoder(); codec-free PPM/PGM/BMP/PNG: "
+        "image_feature_decoder(); WAV: wav_feature_decoder())"
     )
 
 
@@ -249,111 +249,7 @@ def _png_assemble(
 _PNG_MAX_RASTER_BYTES = 1 << 28
 
 
-_UNFILTER_C_SRC = r"""
-#include <stdint.h>
-static int iabs(int v) { return v < 0 ? -v : v; }
-void png_unfilter(const uint8_t *data, int64_t h, int64_t w, int64_t ch,
-                  uint8_t *out) {
-    int64_t stride = w * ch;
-    const uint8_t *prev = 0;
-    for (int64_t y = 0; y < h; y++) {
-        int f = data[y * (stride + 1)];
-        const uint8_t *row = data + y * (stride + 1) + 1;
-        uint8_t *rec = out + y * stride;
-        for (int64_t x = 0; x < stride; x++) {
-            int a = x >= ch ? rec[x - ch] : 0;
-            int b = prev ? prev[x] : 0;
-            int c = (prev && x >= ch) ? prev[x - ch] : 0;
-            int pred;
-            switch (f) {
-                case 0: pred = 0; break;
-                case 1: pred = a; break;
-                case 2: pred = b; break;
-                case 3: pred = (a + b) >> 1; break;
-                default: {
-                    int p = a + b - c;
-                    int pa = iabs(p - a), pb = iabs(p - b), pc = iabs(p - c);
-                    pred = (pa <= pb && pa <= pc) ? a : (pb <= pc ? b : c);
-                }
-            }
-            rec[x] = (uint8_t)(row[x] + pred);
-        }
-        prev = rec;
-    }
-}
-"""
-
-#: tri-state: None = not tried yet, False = unavailable, else the ctypes fn
-_native_unfilter_fn = None
-
-
-def _native_unfilter():
-    """Best-effort native unfilter kernel: compiled ONCE per host from
-    ``_UNFILTER_C_SRC`` with the system C compiler into a content-hashed
-    shared object under the temp dir, loaded via ctypes. The serial
-    Average/Paeth byte recurrence is the one genuinely scalar loop in the
-    whole decode path; at C speed a 512² Paeth RGB image unfilters in
-    ~1 ms vs ~60 ms for the vectorized NumPy wavefront and ~220 ms for a
-    Python byte loop — the difference between CPU-bound-in-Python and
-    codec-bound for an image-heavy crawl corpus. Strictly optional: any
-    failure (no compiler, read-only tmp, load error) latches to None and
-    decode falls back to the NumPy wavefront with identical results
-    (parity is property-tested)."""
-    global _native_unfilter_fn
-    if _native_unfilter_fn is not None:
-        return _native_unfilter_fn or None
-    try:
-        import ctypes
-        import hashlib
-        import os
-        import subprocess
-        import tempfile
-
-        tag = hashlib.sha1(_UNFILTER_C_SRC.encode()).hexdigest()[:12]
-        # per-user 0700 cache dir, NOT the shared temp root: a predictable
-        # world-writable path would let another local user pre-plant a
-        # malicious .so that CDLL below would happily execute
-        cache_dir = os.path.join(
-            tempfile.gettempdir(), f"lsh_qd_native_{os.getuid()}"
-        )
-        os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-        st = os.stat(cache_dir)
-        if st.st_uid != os.getuid() or (st.st_mode & 0o077):
-            raise RuntimeError("native cache dir not exclusively ours")
-        so_path = os.path.join(cache_dir, f"png_unfilter_{tag}.so")
-        if not os.path.exists(so_path):
-            tmp = f"{so_path}.{os.getpid()}.tmp"
-            subprocess.run(
-                ["cc", "-O2", "-shared", "-fPIC", "-x", "c", "-", "-o", tmp],
-                input=_UNFILTER_C_SRC.encode(),
-                check=True,
-                capture_output=True,
-                timeout=60,
-            )
-            os.replace(tmp, so_path)  # atomic vs concurrent compilers
-        st = os.stat(so_path)
-        if st.st_uid != os.getuid():
-            raise RuntimeError("native kernel not owned by this user")
-        lib = ctypes.CDLL(so_path)
-        fn = lib.png_unfilter
-        fn.argtypes = [
-            ctypes.c_void_p,
-            ctypes.c_int64,
-            ctypes.c_int64,
-            ctypes.c_int64,
-            ctypes.c_void_p,
-        ]
-        fn.restype = None
-        _native_unfilter_fn = fn
-        return fn
-    except Exception:  # noqa: BLE001 — purely opportunistic acceleration
-        _native_unfilter_fn = False
-        return None
-
-
-def _png_unfilter(
-    data_arr: np.ndarray, h: int, w: int, ch: int, use_native: bool = True
-) -> np.ndarray:
+def _png_unfilter(data_arr: np.ndarray, h: int, w: int, ch: int) -> np.ndarray:
     """Reverse RFC 2083 scanline filtering. ``data_arr`` is (h, stride+1)
     uint8: one filter-type byte then the filtered scanline. Returns
     (h, w, ch) uint8.
@@ -375,13 +271,6 @@ def _png_unfilter(
     bad = ft[(ft < 0) | (ft > 4)]
     if bad.size:
         raise ValueError(f"unknown PNG filter type {int(bad[0])}")
-    if use_native:
-        fn = _native_unfilter()
-        if fn is not None:
-            src = np.ascontiguousarray(data_arr, dtype=np.uint8)
-            out = np.empty((h, w * ch), dtype=np.uint8)
-            fn(src.ctypes.data, h, w, ch, out.ctypes.data)
-            return out.reshape(h, w, ch)
     raw = data_arr[:, 1:].astype(np.int16).reshape(h, w, ch)
     if not np.any(ft >= 3):
         out = np.zeros((h, w, ch), dtype=np.int16)
@@ -823,1180 +712,6 @@ def encode_png_palette(
     return _png_assemble(w, h, 8, 3, 0, body, extra=tuple(extra))
 
 
-# ---------------------------------------------------------------------------
-# Baseline JPEG (ITU T.81 sequential DCT) — pure NumPy/stdlib.
-#
-# JPEG is the dominant crawl image format; until round 5 it was stubbed
-# behind require_decoder ("needs PIL"). This implements the baseline
-# sequential process end to end: marker parse, DQT/DHT/SOF0/SOS/DRI,
-# entropy segments (restart markers + 0xFF00 unstuffing), per-block
-# Huffman decode, vectorized dequant + IDCT (one einsum over all blocks
-# per component), chroma upsampling, and YCbCr→RGB. Progressive (SOF2),
-# arithmetic coding, and hierarchical modes raise ValueError. The
-# Huffman bit loop is per-symbol Python — fine for the Arrow-batched
-# per-payload decode this module does in-sandbox; production adapters
-# still pass PIL for bulk image corpora.
-# ---------------------------------------------------------------------------
-
-#: JPEG decode allocation cap, in SAMPLES (w·h·components). The JPEG path
-#: costs ~14 bytes per sample transient (int32 coefficients + float32
-#: IDCT/plane buffers), not the 1 byte/sample of the PNG raster cap, so
-#: it gets its own bound: 2^26 samples keeps a 12-megapixel RGB photo
-#: decodable (~36M samples) while bounding a crafted near-cap header to
-#: ~1 GB transient instead of the ~5 GB the PNG-cap reuse allowed.
-_JPEG_MAX_SAMPLES = 1 << 26
-
-#: zigzag position → raster index within an 8x8 block (T.81 fig. A.6)
-_JPEG_ZIGZAG = np.array([
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-], dtype=np.int64)
-
-
-def _jpeg_dct_matrix() -> np.ndarray:
-    x = np.arange(8)
-    a = 0.5 * np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16)
-    a[0] /= np.sqrt(2.0)
-    return a  # orthonormal: forward F = A @ B @ A.T, inverse B = A.T @ F @ A
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over one unstuffed entropy segment; reads past
-    the end return zero bits (the spec pads the final byte)."""
-
-    __slots__ = ("d", "i", "acc", "n")
-
-    def __init__(self, data: bytes):
-        self.d = data
-        self.i = 0
-        self.acc = 0
-        self.n = 0
-
-    def get(self, k: int) -> int:
-        if k == 0:
-            return 0
-        while self.n < k:
-            if self.i < len(self.d):
-                self.acc = (self.acc << 8) | self.d[self.i]
-                self.i += 1
-            else:
-                self.acc <<= 8
-            self.n += 8
-        self.n -= k
-        v = (self.acc >> self.n) & ((1 << k) - 1)
-        self.acc &= (1 << self.n) - 1
-        return v
-
-
-def _jpeg_build_huff(counts: list[int], symbols: bytes):
-    """Canonical Huffman table → (mincode, maxcode, valptr, symbols) for
-    the classic maxcode-walk decoder (T.81 F.2.2.3)."""
-    mincode = [0] * 17
-    maxcode = [-1] * 17
-    valptr = [0] * 17
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        valptr[length] = k
-        mincode[length] = code
-        n = counts[length - 1]
-        code += n
-        k += n
-        maxcode[length] = code - 1 if n else -1
-        code <<= 1
-    return mincode, maxcode, valptr, list(symbols)
-
-
-def _jpeg_huff_decode(rd: _JpegBitReader, tbl) -> int:
-    mincode, maxcode, valptr, vals = tbl
-    code = rd.get(1)
-    for length in range(1, 17):
-        mc = maxcode[length]
-        if mc >= 0 and code <= mc:
-            return vals[valptr[length] + code - mincode[length]]
-        code = (code << 1) | rd.get(1)
-    raise ValueError("invalid JPEG huffman code")
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v
-
-
-def _jpeg_entropy_segments(data: bytes, start: int) -> tuple[list[bytes], int]:
-    """Split the scan's entropy-coded bytes at restart markers, removing
-    0xFF00 stuffing; returns (segments, index of the terminating marker)."""
-    segs: list[bytes] = []
-    cur = bytearray()
-    i = start
-    while i < len(data):
-        b = data[i]
-        if b != 0xFF:
-            cur.append(b)
-            i += 1
-            continue
-        nxt = data[i + 1] if i + 1 < len(data) else 0xD9
-        if nxt == 0x00:
-            cur.append(0xFF)
-            i += 2
-        elif nxt == 0xFF:
-            i += 1  # fill byte (T.81 B.1.1.2: any number may pad a marker)
-        elif 0xD0 <= nxt <= 0xD7:  # RSTn
-            segs.append(bytes(cur))
-            cur = bytearray()
-            i += 2
-        else:
-            break
-    segs.append(bytes(cur))
-    return segs, i
-
-
-def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Pure-NumPy baseline JPEG decode (sequential DCT, SOF0/SOF1):
-    grayscale → (H, W) uint8, 3-component YCbCr → (H, W, 3) uint8 RGB.
-    Restart intervals and 4:2:0/4:2:2/4:4:4 chroma subsampling (any
-    H,V ≤ 2; nearest-neighbor chroma upsample) supported; progressive /
-    arithmetic / hierarchical modes and multi-scan sequential raise
-    ValueError. Declared dimensions are capped like the PNG path, and
-    EVERY malformed-input failure is a clean ValueError (totality —
-    same contract the PNG property tests pin)."""
-    import struct
-
-    try:
-        return _decode_jpeg_markers(payload)
-    except (struct.error, IndexError, OverflowError) as e:
-        # OverflowError: a corrupted stream can run the unbounded DC
-        # predictor past int32 before any plausibility check can see it
-        raise ValueError(f"malformed JPEG: {e}") from e
-
-
-def _decode_jpeg_markers(payload: bytes) -> np.ndarray:
-    import struct
-
-    if len(payload) < 4 or payload[0:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    qt: dict[int, np.ndarray] = {}
-    huff_dc: dict[int, tuple] = {}
-    huff_ac: dict[int, tuple] = {}
-    sof = None
-    progressive = False
-    restart_interval = 0
-    scans: list[dict] = []
-    i = 2
-    while i + 4 <= len(payload):
-        if payload[i] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = payload[i + 1]
-        if marker == 0xD8:  # stray SOI
-            i += 2
-            continue
-        if marker == 0xD9:  # EOI before any scan
-            break
-        (seg_len,) = struct.unpack_from(">H", payload, i + 2)
-        seg = payload[i + 4 : i + 2 + seg_len]
-        if len(seg) != seg_len - 2:
-            raise ValueError("truncated JPEG segment")
-        if marker == 0xDB:  # DQT
-            j = 0
-            while j < len(seg):
-                pq, tq = seg[j] >> 4, seg[j] & 15
-                n = 64 * (2 if pq else 1)
-                raw = seg[j + 1 : j + 1 + n]
-                if len(raw) < n:
-                    raise ValueError("truncated DQT")
-                tbl = (
-                    np.frombuffer(raw, dtype=">u2").astype(np.int32)
-                    if pq
-                    else np.frombuffer(raw, dtype=np.uint8).astype(np.int32)
-                )
-                qt[tq] = tbl  # zigzag order, as stored
-                j += 1 + n
-        elif marker == 0xC4:  # DHT
-            j = 0
-            while j + 17 <= len(seg):
-                tc, th = seg[j] >> 4, seg[j] & 15
-                counts = list(seg[j + 1 : j + 17])
-                n = sum(counts)
-                symbols = seg[j + 17 : j + 17 + n]
-                if len(symbols) < n:
-                    raise ValueError("truncated DHT")
-                tbl = _jpeg_build_huff(counts, symbols)
-                (huff_ac if tc else huff_dc)[th] = tbl
-                j += 17 + n
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 prog
-            prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
-            if prec != 8:
-                raise ValueError(f"unsupported JPEG precision {prec}")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = struct.unpack_from(">BBB", seg, 6 + 3 * c)
-                comps.append([cid, hv >> 4, hv & 15, tq])
-            sof = (h, w, comps)
-            progressive = marker == 0xC2
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                f"unsupported JPEG process (marker 0xFF{marker:02X}); "
-                "only baseline/extended sequential and progressive DCT "
-                "are decoded"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", seg, 0)
-        elif marker == 0xDA:  # SOS — entropy data follows the header
-            if sof is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = seg[0]
-            scan_comps = []
-            for c in range(ns):
-                cs, tdta = seg[1 + 2 * c], seg[2 + 2 * c]
-                scan_comps.append((cs, tdta >> 4, tdta & 15))
-            ss, se, ahl = seg[1 + 2 * ns : 4 + 2 * ns]
-            segs, end = _jpeg_entropy_segments(payload, i + 2 + seg_len)
-            scans.append({
-                "comps": scan_comps,
-                "ss": ss,
-                "se": se,
-                "ah": ahl >> 4,
-                "al": ahl & 15,
-                "segs": segs,
-                # DHT/DRI may be redefined between scans: snapshot now
-                "dc": dict(huff_dc),
-                "ac": dict(huff_ac),
-                "ri": restart_interval,
-            })
-            i = end
-            continue
-        # APPn / COM / others: skip
-        i += 2 + seg_len
-    if sof is None or not scans:
-        raise ValueError("JPEG has no SOS scan")
-    h, w, comps = sof
-    if w <= 0 or h <= 0:
-        raise ValueError("invalid JPEG dimensions")
-    if len(comps) not in (1, 3):
-        # reject CMYK/2-comp BEFORE entropy decode and reconstruction —
-        # the color-convert tail only handles gray and YCbCr anyway
-        raise ValueError(f"unsupported JPEG component count {len(comps)}")
-    if w * h * len(comps) > _JPEG_MAX_SAMPLES:
-        raise ValueError("JPEG dimensions exceed decode cap")
-    if progressive:
-        return _jpeg_decode_progressive(h, w, comps, scans, qt)
-    if len(scans) != 1 or len(scans[0]["comps"]) != len(comps):
-        raise ValueError(
-            "multi-scan sequential JPEG not supported "
-            f"({len(scans)} scans, first has {len(scans[0]['comps'])} of "
-            f"{len(comps)} components)"
-        )
-    s0 = scans[0]
-    scan_tbl = {cs: (td, ta) for cs, td, ta in s0["comps"]}
-    return _jpeg_decode_scan(
-        h, w, comps, scan_tbl, qt, s0["dc"], s0["ac"], s0["ri"], s0["segs"]
-    )
-
-
-def _jpeg_decode_scan(
-    h, w, comps, scan_tbl, qt, huff_dc, huff_ac, restart_interval, segs
-) -> np.ndarray:
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if not all(1 <= c[1] <= 2 and 1 <= c[2] <= 2 for c in comps):
-        raise ValueError("unsupported JPEG sampling factors (H,V must be 1-2)")
-    mcx = (w + 8 * hmax - 1) // (8 * hmax)
-    mcy = (h + 8 * vmax - 1) // (8 * vmax)
-    states = []
-    for cid, ch, cv, tq in comps:
-        if tq not in qt:
-            raise ValueError(f"JPEG component references missing DQT {tq}")
-        if cid not in scan_tbl:
-            raise ValueError(f"JPEG scan missing component {cid}")
-        td, ta = scan_tbl[cid]
-        if td not in huff_dc or ta not in huff_ac:
-            raise ValueError("JPEG scan references missing DHT")
-        bw, bh = mcx * ch, mcy * cv
-        states.append({
-            "H": ch, "V": cv, "bw": bw, "bh": bh,
-            "coef": np.zeros((bw * bh, 64), dtype=np.int32),
-            "q": qt[tq], "dc": huff_dc[td], "ac": huff_ac[ta],
-        })
-
-    seg_idx = 0
-    rd = _JpegBitReader(segs[0])
-    preds = [0] * len(states)
-    mcus_in_seg = 0
-
-    def next_restart_segment():
-        nonlocal seg_idx, rd, mcus_in_seg
-        seg_idx += 1
-        if seg_idx >= len(segs):
-            raise ValueError("JPEG truncated at restart boundary")
-        rd = _JpegBitReader(segs[seg_idx])
-        preds[:] = [0] * len(states)
-        mcus_in_seg = 0
-
-    def decode_block(ci, st, row):
-        t = _jpeg_huff_decode(rd, st["dc"])
-        if t > 15:
-            # only possible via a corrupted DHT: a size
-            # this large would overflow the coef array
-            raise ValueError(f"invalid JPEG DC size {t}")
-        diff = _jpeg_extend(rd.get(t), t) if t else 0
-        preds[ci] += diff
-        row[0] = preds[ci]
-        k = 1
-        while k < 64:
-            rs = _jpeg_huff_decode(rd, st["ac"])
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r == 15:
-                    k += 16
-                    continue
-                break  # EOB
-            k += r
-            if k > 63:
-                raise ValueError("JPEG AC run past block end")
-            row[k] = _jpeg_extend(rd.get(s), s)
-            k += 1
-
-    if len(states) == 1:
-        # T.81: a one-component scan is NON-INTERLEAVED — the MCU is a
-        # single block and the scan covers the component's real block
-        # grid ceil(cw/8) x ceil(ch/8), NOT the grid padded by its own
-        # sampling factors. A legal grayscale JPEG declaring H/V=2 would
-        # otherwise be walked over 4x the blocks its entropy stream
-        # encodes and fail with 'invalid JPEG huffman code' (ADVICE.md).
-        # For H=V=1 this traversal is identical to the MCU loop below.
-        st = states[0]
-        cw = (w * st["H"] + hmax - 1) // hmax
-        chh = (h * st["V"] + vmax - 1) // vmax
-        for by in range((chh + 7) // 8):
-            for bx in range((cw + 7) // 8):
-                if restart_interval and mcus_in_seg == restart_interval:
-                    next_restart_segment()
-                decode_block(0, st, st["coef"][by * st["bw"] + bx])
-                mcus_in_seg += 1
-        return _jpeg_reconstruct(h, w, states, hmax, vmax)
-
-    for my in range(mcy):
-        for mx in range(mcx):
-            if restart_interval and mcus_in_seg == restart_interval:
-                next_restart_segment()
-            for ci, st in enumerate(states):
-                for by in range(st["V"]):
-                    for bx in range(st["H"]):
-                        decode_block(
-                            ci,
-                            st,
-                            st["coef"][
-                                (my * st["V"] + by) * st["bw"]
-                                + mx * st["H"]
-                                + bx
-                            ],
-                        )
-            mcus_in_seg += 1
-
-    return _jpeg_reconstruct(h, w, states, hmax, vmax)
-
-
-def _jpeg_decode_progressive(h, w, comps, scans, qt) -> np.ndarray:
-    """Progressive JPEG (SOF2): coefficients accumulate across scans —
-    DC first + DC refinement (interleaved or single-component), AC
-    spectral-selection bands and AC successive-approximation refinement
-    (single-component scans with EOB-run coding, T.81 G.1.2). Each scan
-    snapshots the Huffman tables in force when its SOS appeared."""
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if not all(1 <= c[1] <= 2 and 1 <= c[2] <= 2 for c in comps):
-        raise ValueError("unsupported JPEG sampling factors (H,V must be 1-2)")
-    mcx = (w + 8 * hmax - 1) // (8 * hmax)
-    mcy = (h + 8 * vmax - 1) // (8 * vmax)
-    states = []
-    by_id: dict[int, dict] = {}
-    for cid, ch, cv, tq in comps:
-        if tq not in qt:
-            raise ValueError(f"JPEG component references missing DQT {tq}")
-        bw, bh = mcx * ch, mcy * cv
-        # non-interleaved scans cover only the component's REAL block
-        # grid (ceil of its sample dims), not the MCU-padded one
-        cw = (w * ch + hmax - 1) // hmax
-        chh = (h * cv + vmax - 1) // vmax
-        st = {
-            "cid": cid, "H": ch, "V": cv, "bw": bw, "bh": bh,
-            "nbx": (cw + 7) // 8, "nby": (chh + 7) // 8,
-            "coef": np.zeros((bw * bh, 64), dtype=np.int32),
-            "q": qt[tq], "pred": 0,
-        }
-        states.append(st)
-        by_id[cid] = st
-
-    for scan in scans:
-        ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
-        ri = scan["ri"]
-        segs = scan["segs"]
-        seg_idx = 0
-        rd = _JpegBitReader(segs[0])
-        if ss == 0:  # DC scan (se must be 0)
-            if se != 0:
-                raise ValueError("JPEG DC scan with nonzero Se")
-            members = []
-            for cs, td, _ta in scan["comps"]:
-                if cs not in by_id:
-                    raise ValueError(f"JPEG scan references component {cs}")
-                if ah == 0 and td not in scan["dc"]:
-                    raise ValueError("JPEG scan references missing DHT")
-                members.append((by_id[cs], scan["dc"].get(td)))
-                by_id[cs]["pred"] = 0
-            interleaved = len(members) > 1
-            if interleaved:
-                nx, ny = mcx, mcy
-            else:
-                st0 = members[0][0]
-                nx, ny = st0["nbx"], st0["nby"]
-            units = 0
-            for uy in range(ny):
-                for ux in range(nx):
-                    if ri and units == ri:
-                        seg_idx += 1
-                        if seg_idx >= len(segs):
-                            raise ValueError("JPEG truncated at restart")
-                        rd = _JpegBitReader(segs[seg_idx])
-                        for st, _t in members:
-                            st["pred"] = 0
-                        units = 0
-                    for st, dtbl in members:
-                        reps = (
-                            [(by_, bx_) for by_ in range(st["V"])
-                             for bx_ in range(st["H"])]
-                            if interleaved
-                            else [(0, 0)]
-                        )
-                        for by_, bx_ in reps:
-                            if interleaved:
-                                bidx = (uy * st["V"] + by_) * st["bw"] + (
-                                    ux * st["H"] + bx_
-                                )
-                            else:
-                                bidx = uy * st["bw"] + ux
-                            row = st["coef"][bidx]
-                            if ah == 0:
-                                t = _jpeg_huff_decode(rd, dtbl)
-                                if t > 15:
-                                    raise ValueError(
-                                        f"invalid JPEG DC size {t}"
-                                    )
-                                diff = (
-                                    _jpeg_extend(rd.get(t), t) if t else 0
-                                )
-                                st["pred"] += diff
-                                row[0] = st["pred"] << al
-                            else:  # DC refinement: one bit per block
-                                if rd.get(1):
-                                    row[0] = int(row[0]) | (1 << al)
-                    units += 1
-        else:  # AC scan: exactly one component, never interleaved
-            if len(scan["comps"]) != 1:
-                raise ValueError("JPEG AC progressive scan must have 1 comp")
-            if not 1 <= ss <= se <= 63:
-                raise ValueError("invalid JPEG spectral selection band")
-            cs, _td, ta = scan["comps"][0]
-            if cs not in by_id:
-                raise ValueError(f"JPEG scan references component {cs}")
-            if ta not in scan["ac"]:
-                raise ValueError("JPEG scan references missing DHT")
-            st = by_id[cs]
-            atbl = scan["ac"][ta]
-            eobrun = 0
-            units = 0
-            for by_ in range(st["nby"]):
-                for bx_ in range(st["nbx"]):
-                    if ri and units == ri:
-                        seg_idx += 1
-                        if seg_idx >= len(segs):
-                            raise ValueError("JPEG truncated at restart")
-                        rd = _JpegBitReader(segs[seg_idx])
-                        eobrun = 0
-                        units = 0
-                    row = st["coef"][by_ * st["bw"] + bx_]
-                    if ah == 0:
-                        eobrun = _jpeg_ac_first_block(
-                            rd, row, ss, se, al, atbl, eobrun
-                        )
-                    else:
-                        eobrun = _jpeg_ac_refine_block(
-                            rd, row, ss, se, al, atbl, eobrun
-                        )
-                    units += 1
-    return _jpeg_reconstruct(h, w, states, hmax, vmax)
-
-
-def _jpeg_ac_first_block(rd, row, ss, se, al, atbl, eobrun) -> int:
-    """First (Ah=0) AC scan of a spectral band for one block; returns the
-    remaining EOB run."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = _jpeg_huff_decode(rd, atbl)
-        r, s = rs >> 4, rs & 15
-        if s == 0:
-            if r < 15:
-                return (1 << r) - 1 + rd.get(r)  # EOB run incl. this block
-            k += 16  # ZRL
-            continue
-        k += r
-        if k > se:
-            raise ValueError("JPEG AC run past band end")
-        row[k] = _jpeg_extend(rd.get(s), s) << al
-        k += 1
-    return 0
-
-
-def _jpeg_ac_refine_block(rd, row, ss, se, al, atbl, eobrun) -> int:
-    """Successive-approximation (Ah>0) AC refinement for one block —
-    the T.81 G.1.2.3 / libjpeg decode_mcu_AC_refine control flow:
-    correction bits for already-nonzero coefficients, ±1<<Al births for
-    new ones, EOB runs carrying correction bits to the band end."""
-    p1 = 1 << al
-    m1 = -(1 << al)
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = _jpeg_huff_decode(rd, atbl)
-            r, s = rs >> 4, rs & 15
-            newval = 0
-            if s == 0:
-                if r < 15:
-                    eobrun = (1 << r) + rd.get(r)
-                    break
-                # ZRL: advance over 16 zero-history coefficients
-            else:
-                if s != 1:
-                    raise ValueError("invalid JPEG AC refinement size")
-                newval = p1 if rd.get(1) else m1
-            while k <= se:
-                v = int(row[k])
-                if v != 0:
-                    if rd.get(1) and (v & p1) == 0:
-                        row[k] = v + (p1 if v > 0 else m1)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if newval and k <= se:
-                row[k] = newval
-            k += 1
-    if eobrun > 0:
-        while k <= se:
-            v = int(row[k])
-            if v != 0 and rd.get(1) and (v & p1) == 0:
-                row[k] = v + (p1 if v > 0 else m1)
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _jpeg_reconstruct(h, w, states, hmax, vmax) -> np.ndarray:
-    """Shared tail of the sequential and progressive decoders: dequant +
-    IDCT (one einsum per component) + fancy chroma upsample + color
-    convert."""
-    # float32 throughout: IDCT at this precision is within ±1 LSB of the
-    # float64 result for 8-bit samples, at half the transient footprint
-    # (this path is sized by _JPEG_MAX_SAMPLES)
-    a = _jpeg_dct_matrix().astype(np.float32)
-    planes = []
-    for st in states:
-        # int64 product: coef is int32 and q can be 16-bit — a crafted
-        # stream with a large accumulated DC predictor times a big quant
-        # entry can wrap int32 silently (garbage pixels instead of a
-        # loud error — ADVICE.md); the float32 cast below is unchanged
-        deq = st["coef"].astype(np.int64) * st["q"][None, :]  # zigzag order
-        blocks = np.zeros((len(deq), 64), dtype=np.float32)
-        blocks[:, _JPEG_ZIGZAG] = deq
-        blocks = blocks.reshape(-1, 8, 8)
-        spatial = np.einsum("ij,njk,kl->nil", a.T, blocks, a) + np.float32(
-            128.0
-        )
-        plane = (
-            spatial.reshape(st["bh"], st["bw"], 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(st["bh"] * 8, st["bw"] * 8)
-        )
-        # triangular ("fancy") chroma upsampling, the libjpeg-family
-        # default: each output sample is a 3:1 blend toward its nearer
-        # source neighbor, separably per axis, edges replicated —
-        # nearest-replicate leaves visible (and cross-decoder-diff-
-        # visible) errors exactly on block edges
-        if vmax // st["V"] == 2:
-            prev = np.vstack([plane[:1], plane[:-1]])
-            nxt = np.vstack([plane[1:], plane[-1:]])
-            up = np.empty((plane.shape[0] * 2, plane.shape[1]), plane.dtype)
-            up[0::2] = (3.0 * plane + prev) / 4.0
-            up[1::2] = (3.0 * plane + nxt) / 4.0
-            plane = up
-        if hmax // st["H"] == 2:
-            prev = np.hstack([plane[:, :1], plane[:, :-1]])
-            nxt = np.hstack([plane[:, 1:], plane[:, -1:]])
-            up = np.empty((plane.shape[0], plane.shape[1] * 2), plane.dtype)
-            up[:, 0::2] = (3.0 * plane + prev) / 4.0
-            up[:, 1::2] = (3.0 * plane + nxt) / 4.0
-            plane = up
-        planes.append(plane[:h, :w])
-    if len(planes) == 1:
-        return np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
-    if len(planes) != 3:
-        raise ValueError(f"unsupported JPEG component count {len(planes)}")
-    y, cb, cr = planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(np.round(np.dstack([r, g, b])), 0, 255).astype(np.uint8)
-
-
-# ---------------------------------------------------------------------------
-# GIF (87a/89a) — pure stdlib/NumPy LZW decode: palettes (global/local),
-# interlacing, and GCE transparency. Animations decode as their FIRST
-# frame (dedup features come from one frame; a frame sampler is the
-# production adapter's job).
-# ---------------------------------------------------------------------------
-
-
-def _gif_lzw_decode(data: bytes, min_code: int, max_pixels: int) -> bytes:
-    """GIF-flavor LZW (LSB-first variable-width codes, CLEAR/END, 12-bit
-    table cap). Stops at END, at ``max_pixels`` output bytes (a crafted
-    stream cannot allocate past the declared frame — same bomb posture
-    as the PNG/JPEG caps), or at input exhaustion."""
-    if not 2 <= min_code <= 8:
-        raise ValueError(f"invalid GIF LZW minimum code size {min_code}")
-    clear = 1 << min_code
-    end = clear + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    code_size = min_code + 1
-    acc = 0
-    nbits = 0
-    pos = 0
-    out = bytearray()
-    prev: bytes | None = None
-    while len(out) < max_pixels:
-        while nbits < code_size:
-            if pos >= len(data):
-                return bytes(out)  # missing END: return what we have
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << code_size) - 1)
-        acc >>= code_size
-        nbits -= code_size
-        if code == clear:
-            table = list(base)
-            code_size = min_code + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("GIF LZW stream starts with invalid code")
-            entry = table[code]
-        else:
-            if code < len(table):
-                entry = table[code]
-            elif code == len(table):
-                entry = prev + prev[:1]  # the KwKwK case
-            else:
-                raise ValueError("invalid GIF LZW code")
-            if len(table) < 4096:
-                table.append(prev + entry[:1])
-        out += entry
-        prev = entry
-        if len(table) >= (1 << code_size) and code_size < 12:
-            code_size += 1
-    return bytes(out)
-
-
-#: interlaced GIF pass structure: row start / step per pass
-_GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def decode_gif(payload: bytes) -> np.ndarray:
-    """GIF87a/89a → (H, W, 3) uint8, or (H, W, 4) when the first frame's
-    graphic-control extension declares a transparent index (alpha 0
-    there, and on any screen area the frame does not cover). Interlaced
-    frames are de-interlaced; animations return the FIRST frame composed
-    onto the logical screen. Malformed input always raises ValueError
-    (totality), and BOTH the logical-screen and frame dimensions are
-    capped before any pixel allocation."""
-    import struct
-
-    try:
-        return _decode_gif_inner(payload)
-    except (struct.error, IndexError) as e:
-        raise ValueError(f"malformed GIF: {e}") from e
-
-
-def _decode_gif_inner(payload: bytes) -> np.ndarray:
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    if len(payload) < 13:
-        raise ValueError("truncated GIF header")
-    w, h, flags, bg, _ar = struct.unpack_from("<HHBBB", payload, 6)
-    if w <= 0 or h <= 0 or w * h * 4 > _PNG_MAX_RASTER_BYTES:
-        raise ValueError(f"invalid GIF dimensions {w}x{h}")
-    i = 13
-    gct: np.ndarray | None = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        raw = payload[i : i + 3 * n]
-        if len(raw) < 3 * n:
-            raise ValueError("truncated GIF global color table")
-        gct = np.frombuffer(raw, dtype=np.uint8).reshape(-1, 3)
-        i += 3 * n
-    transparent: int | None = None
-    while i < len(payload):
-        b = payload[i]
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension
-            if i + 2 > len(payload):
-                raise ValueError("truncated GIF extension")
-            label = payload[i + 1]
-            i += 2
-            first = True
-            while True:
-                if i >= len(payload):
-                    raise ValueError("truncated GIF extension blocks")
-                size = payload[i]
-                if first and label == 0xF9 and size >= 4:
-                    block = payload[i + 1 : i + 1 + size]
-                    if len(block) >= 4 and block[0] & 1:
-                        transparent = block[3]
-                first = False
-                i += 1 + size
-                if size == 0:
-                    break
-        elif b == 0x2C:  # image descriptor
-            left, top, iw, ih, lflags = struct.unpack_from(
-                "<HHHHB", payload, i + 1
-            )
-            i += 10
-            if iw <= 0 or ih <= 0 or iw * ih * 4 > _PNG_MAX_RASTER_BYTES:
-                # the FRAME dims need their own cap: a 1x1 logical screen
-                # with a 65535x65535 descriptor would otherwise let a tiny
-                # KwKwK-growing LZW stream allocate gigabytes
-                raise ValueError(f"invalid GIF frame dimensions {iw}x{ih}")
-            ct = gct
-            if lflags & 0x80:
-                n = 2 << (lflags & 7)
-                raw = payload[i : i + 3 * n]
-                if len(raw) < 3 * n:
-                    raise ValueError("truncated GIF local color table")
-                ct = np.frombuffer(raw, dtype=np.uint8).reshape(-1, 3)
-                i += 3 * n
-            if ct is None:
-                raise ValueError("GIF frame without any color table")
-            if i >= len(payload):
-                raise ValueError("truncated GIF image data")
-            min_code = payload[i]
-            i += 1
-            data = bytearray()
-            while True:
-                if i >= len(payload):
-                    raise ValueError("truncated GIF data sub-blocks")
-                size = payload[i]
-                i += 1
-                data += payload[i : i + size]
-                i += size
-                if size == 0:
-                    break
-            idx = np.frombuffer(
-                _gif_lzw_decode(bytes(data), min_code, iw * ih),
-                dtype=np.uint8,
-            )
-            if len(idx) < iw * ih:
-                raise ValueError("GIF pixel data shorter than the frame")
-            idx = idx[: iw * ih].reshape(ih, iw)
-            if lflags & 0x40:  # interlaced: rows arrive in 4 passes
-                rows = np.concatenate(
-                    [np.arange(start, ih, step) for start, step in
-                     _GIF_INTERLACE]
-                )
-                out = np.empty_like(idx)
-                out[rows] = idx
-                idx = out
-            if int(idx.max(initial=0)) >= len(ct):
-                raise ValueError("GIF index out of color-table range")
-            rgb = ct[idx]
-            with_alpha = transparent is not None
-            if with_alpha:
-                alpha = np.where(idx == int(transparent), 0, 255).astype(
-                    np.uint8
-                )
-                frame = np.dstack([rgb, alpha])
-            else:
-                frame = rgb
-            if (left, top, iw, ih) == (0, 0, w, h):
-                return frame
-            # partial first frame: compose onto the logical screen
-            ch = 4 if with_alpha else 3
-            fill = (
-                list(gct[bg]) if gct is not None and bg < len(gct)
-                else [0, 0, 0]
-            )
-            canvas = np.zeros((h, w, ch), dtype=np.uint8)
-            canvas[:, :, :3] = np.array(fill, dtype=np.uint8)
-            if with_alpha:
-                canvas[:, :, 3] = 0  # uncovered screen is transparent
-            y1 = min(top + ih, h)
-            x1 = min(left + iw, w)
-            if y1 > top and x1 > left:
-                canvas[top:y1, left:x1] = frame[: y1 - top, : x1 - left]
-            return canvas
-        else:
-            raise ValueError(f"unknown GIF block 0x{b:02X}")
-    raise ValueError("GIF has no image data")
-
-
-def encode_gif(
-    indices: np.ndarray,
-    palette: np.ndarray,
-    transparent: int | None = None,
-    interlace: bool = False,
-) -> bytes:
-    """(H, W) uint8 palette indices + (N ≤ 256, 3) palette → GIF89a.
-    Fixture-side twin of ``decode_gif``: the LZW stream is the trivial
-    legal encoding (CLEAR before every pixel code, so the table never
-    grows) — bloated output, spec-conformant input for any decoder, and
-    it lets tests plant interlaced/transparent frames no off-the-shelf
-    writer emits."""
-    import struct
-
-    idx = np.ascontiguousarray(indices, dtype=np.uint8)
-    if idx.ndim != 2:
-        raise ValueError("indices must be (H, W)")
-    pal = np.ascontiguousarray(palette, dtype=np.uint8)
-    if pal.ndim != 2 or pal.shape[1] != 3 or not 1 <= len(pal) <= 256:
-        raise ValueError("palette must be (N<=256, 3) uint8")
-    if int(idx.max(initial=0)) >= len(pal):
-        raise ValueError("palette index out of range")
-    if transparent is not None and not 0 <= transparent < len(pal):
-        raise ValueError("transparent index out of palette range")
-    h, w = idx.shape
-    # color-table size: power of two ≥ len(pal), ≥ 4 (min_code ≥ 2)
-    bits = max(2, (len(pal) - 1).bit_length())
-    n = 1 << bits
-    table = np.zeros((n, 3), dtype=np.uint8)
-    table[: len(pal)] = pal
-    out = b"GIF89a" + struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    out += table.tobytes()
-    if transparent is not None:
-        out += bytes([0x21, 0xF9, 4, 0x01, 0, 0, transparent, 0])
-    out += struct.pack(
-        "<BHHHHB", 0x2C, 0, 0, w, h, 0x40 if interlace else 0
-    )
-    rows = idx
-    if interlace:
-        order = np.concatenate(
-            [np.arange(start, h, step) for start, step in _GIF_INTERLACE]
-        )
-        rows = idx[order]
-    min_code = bits
-    clear = 1 << min_code
-    end = clear + 1
-    code_size = min_code + 1
-    acc = 0
-    nbits = 0
-    stream = bytearray()
-    # CLEAR resets the decoder's table before every pixel, so the code
-    # size never grows past min_code+1 — trivially legal LZW
-    for px in rows.ravel():
-        for code in (clear, int(px)):
-            acc |= code << nbits
-            nbits += code_size
-            while nbits >= 8:
-                stream.append(acc & 0xFF)
-                acc >>= 8
-                nbits -= 8
-    acc |= end << nbits
-    nbits += code_size
-    while nbits > 0:
-        stream.append(acc & 0xFF)
-        acc >>= 8
-        nbits -= 8
-    out += bytes([min_code])
-    for off in range(0, len(stream), 255):
-        chunk = stream[off : off + 255]
-        out += bytes([len(chunk)]) + bytes(chunk)
-    return out + b"\x00\x3b"
-
-
-def gif_feature_decoder(grid: int = 8) -> Callable[[bytes], np.ndarray]:
-    """payload → 64-dim perceptual feature (decode_gif + image_feature);
-    alpha never feeds luminance."""
-
-    def decode(payload: bytes) -> np.ndarray:
-        arr = decode_gif(payload)
-        if arr.ndim == 3 and arr.shape[2] == 4:
-            arr = arr[:, :, :3]
-        return image_feature(arr, grid)
-
-    return decode
-
-
-# T.81 Annex K.1/K.2 reference quantization tables (zigzag order applied
-# at encode time; stored here in raster order for readability)
-_JPEG_QT_LUMA = np.array([
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99,
-], dtype=np.int32)
-_JPEG_QT_CHROMA = np.array(
-    [17, 18, 24, 47, 99, 99, 99, 99,
-     18, 21, 26, 66, 99, 99, 99, 99,
-     24, 26, 56, 99, 99, 99, 99, 99,
-     47, 66, 99, 99, 99, 99, 99, 99] + [99] * 32,
-    dtype=np.int32,
-)
-
-
-class _JpegBitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, v: int, k: int) -> None:
-        if k == 0:
-            return
-        self.acc = (self.acc << k) | (v & ((1 << k) - 1))
-        self.n += k
-        while self.n >= 8:
-            self.n -= 8
-            byte = (self.acc >> self.n) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)  # stuffing
-        self.acc &= (1 << self.n) - 1
-
-    def pad_to_byte(self) -> None:
-        if self.n:
-            self.put((1 << (8 - self.n)) - 1, 8 - self.n)
-
-
-# fixed single-length canonical Huffman fixture tables: every DC size
-# symbol at 4 bits (12 < 2^4 - 1) and every baseline AC symbol at 8 bits
-# (162 < 2^8 - 1) — legal, simple, shared by all components
-_JPEG_DC_SYMBOLS = bytes(range(12))
-_JPEG_AC_SYMBOLS = bytes(
-    [0x00, 0xF0] + [(r << 4) | s for r in range(16) for s in range(1, 11)]
-)
-_JPEG_DC_COUNTS = [0, 0, 0, 12] + [0] * 12
-_JPEG_AC_COUNTS = [0] * 7 + [162] + [0] * 8
-
-
-def _jpeg_code_map(counts: list[int], symbols: bytes) -> dict:
-    code = 0
-    k = 0
-    out = {}
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            out[symbols[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
-def _jpeg_quality_tables(quality: int) -> tuple[np.ndarray, np.ndarray]:
-    """libjpeg-style quality scaling of the Annex K tables."""
-    if not 1 <= quality <= 100:
-        raise ValueError("quality must be 1-100")
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    def sc(t):
-        return np.clip((t * scale + 50) // 100, 1, 255).astype(np.int32)
-    return sc(_JPEG_QT_LUMA), sc(_JPEG_QT_CHROMA)
-
-
-def encode_jpeg_baseline(
-    img: np.ndarray,
-    quality: int = 90,
-    subsampling: str = "444",
-    restart_interval: int = 0,
-) -> bytes:
-    """(H, W) gray or (H, W, 3) RGB uint8 → baseline sequential JPEG.
-    Fixture-side twin of ``decode_jpeg`` — NOT a production encoder: it
-    exists so the decoder can be exercised against real entropy-coded
-    bitstreams (including 4:2:0 subsampling and restart markers) without
-    any codec library, and so an independent decoder (javax.imageio, PIL)
-    can cross-validate that the bitstream is spec-legal."""
-    import struct
-
-    arr = np.ascontiguousarray(img, dtype=np.uint8)
-    gray = arr.ndim == 2
-    if not gray and (arr.ndim != 3 or arr.shape[2] != 3):
-        raise ValueError("encoder takes (H, W) gray or (H, W, 3) RGB")
-    if subsampling not in ("444", "420"):
-        raise ValueError("subsampling must be '444' or '420'")
-    h, w = arr.shape[:2]
-    qt_l, qt_c = _jpeg_quality_tables(quality)
-    a = _jpeg_dct_matrix()
-    dc_map = _jpeg_code_map(_JPEG_DC_COUNTS, _JPEG_DC_SYMBOLS)
-    ac_map = _jpeg_code_map(_JPEG_AC_COUNTS, _JPEG_AC_SYMBOLS)
-
-    if gray:
-        planes = [arr.astype(np.float64)]
-        factors = [(1, 1)]
-        qts = [qt_l]
-    else:
-        rgb = arr.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        if subsampling == "420":
-            # pad to even, 2x2 box-mean the chroma planes
-            pe = np.pad(
-                np.dstack([cb, cr]),
-                ((0, h % 2), (0, w % 2), (0, 0)),
-                mode="edge",
-            )
-            sub = pe.reshape(pe.shape[0] // 2, 2, pe.shape[1] // 2, 2, 2).mean(
-                axis=(1, 3)
-            )
-            planes = [y, sub[:, :, 0], sub[:, :, 1]]
-            factors = [(2, 2), (1, 1), (1, 1)]
-        else:
-            planes = [y, cb, cr]
-            factors = [(1, 1), (1, 1), (1, 1)]
-        qts = [qt_l, qt_c, qt_c]
-
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    mcx = (w + 8 * hmax - 1) // (8 * hmax)
-    mcy = (h + 8 * vmax - 1) // (8 * vmax)
-    # quantized zigzag coefficients per component, MCU block order
-    comp_blocks = []
-    for plane, (fh, fv), q in zip(planes, factors, qts):
-        ph, pw = mcy * fv * 8, mcx * fh * 8
-        padded = np.pad(
-            plane,
-            ((0, ph - plane.shape[0]), (0, pw - plane.shape[1])),
-            mode="edge",
-        )
-        blocks = (
-            padded.reshape(ph // 8, 8, pw // 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(-1, 8, 8)
-        ) - 128.0
-        coef = np.einsum("ij,njk,kl->nil", a, blocks, a.T).reshape(-1, 64)
-        zig = coef[:, _JPEG_ZIGZAG]
-        qz = q[_JPEG_ZIGZAG][None, :]
-        comp_blocks.append(
-            np.round(zig / qz).astype(np.int32)
-        )
-
-    def put_code(wr, cmap, sym):
-        c, ln = cmap[sym]
-        wr.put(c, ln)
-
-    wr = _JpegBitWriter()
-    chunks: list[bytes] = []
-    preds = [0] * len(planes)
-    bws = [mcx * f[0] for f in factors]
-    mcus_in_seg = 0
-    rst = 0
-    for my in range(mcy):
-        for mx in range(mcx):
-            if restart_interval and mcus_in_seg == restart_interval:
-                wr.pad_to_byte()
-                chunks.append(bytes(wr.out))
-                chunks.append(bytes([0xFF, 0xD0 + (rst & 7)]))
-                rst += 1
-                wr = _JpegBitWriter()
-                preds = [0] * len(planes)
-                mcus_in_seg = 0
-            for ci, (fh, fv) in enumerate(factors):
-                for by in range(fv):
-                    for bx in range(fh):
-                        row = comp_blocks[ci][
-                            (my * fv + by) * bws[ci] + mx * fh + bx
-                        ]
-                        diff = int(row[0]) - preds[ci]
-                        preds[ci] = int(row[0])
-                        t = abs(diff).bit_length()
-                        put_code(wr, dc_map, t)
-                        if t:
-                            wr.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-                        run = 0
-                        last_nz = int(np.max(np.nonzero(row)[0])) if np.any(
-                            row[1:]
-                        ) else 0
-                        for k in range(1, 64):
-                            v = int(row[k])
-                            if k > last_nz:
-                                put_code(wr, ac_map, 0x00)  # EOB
-                                break
-                            if v == 0:
-                                run += 1
-                                continue
-                            while run >= 16:
-                                put_code(wr, ac_map, 0xF0)  # ZRL
-                                run -= 16
-                            s = abs(v).bit_length()
-                            put_code(wr, ac_map, (run << 4) | s)
-                            wr.put(v if v >= 0 else v + (1 << s) - 1, s)
-                            run = 0
-            mcus_in_seg += 1
-    wr.pad_to_byte()
-    chunks.append(bytes(wr.out))
-    entropy = b"".join(chunks)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = b"\xff\xd8"  # SOI
-    out += seg(0xDB, bytes([0]) + bytes(qt_l[_JPEG_ZIGZAG].astype(np.uint8)))
-    if not gray:
-        out += seg(
-            0xDB, bytes([1]) + bytes(qt_c[_JPEG_ZIGZAG].astype(np.uint8))
-        )
-    nc = 1 if gray else 3
-    sof_body = struct.pack(">BHHB", 8, h, w, nc)
-    for ci in range(nc):
-        fh, fv = factors[ci]
-        sof_body += bytes([ci + 1, (fh << 4) | fv, 0 if ci == 0 else 1])
-    out += seg(0xC0, sof_body)
-    out += seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_COUNTS) + _JPEG_DC_SYMBOLS
-        + bytes([0x10]) + bytes(_JPEG_AC_COUNTS) + _JPEG_AC_SYMBOLS,
-    )
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos_body = bytes([nc])
-    for ci in range(nc):
-        sos_body += bytes([ci + 1, 0x00])  # DC table 0, AC table 0
-    sos_body += bytes([0, 63, 0])
-    out += seg(0xDA, sos_body)
-    return out + entropy + b"\xff\xd9"
-
-
-def jpeg_feature_decoder(grid: int = 8) -> Callable[[bytes], np.ndarray]:
-    """payload → 64-dim perceptual feature (decode_jpeg + image_feature)."""
-
-    def decode(payload: bytes) -> np.ndarray:
-        return image_feature(decode_jpeg(payload), grid)
-
-    return decode
-
-
 def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     """PCM WAV → (mono float32 in [-1, 1], sample_rate). stdlib ``wave``
     handles the RIFF framing; NumPy converts/downmixes."""
@@ -2108,15 +823,6 @@ def audio_feature(x: np.ndarray, n_windows: int = 32) -> np.ndarray:
     return feat
 
 
-def ppm_feature_decoder(grid: int = 8) -> Callable[[bytes], np.ndarray]:
-    """payload → 64-dim perceptual feature (decode_ppm + image_feature)."""
-
-    def decode(payload: bytes) -> np.ndarray:
-        return image_feature(decode_ppm(payload), grid)
-
-    return decode
-
-
 def wav_feature_decoder(n_windows: int = 32) -> Callable[[bytes], np.ndarray]:
     """payload → 64-dim energy/ZCR feature (decode_wav + audio_feature)."""
 
@@ -2127,51 +833,19 @@ def wav_feature_decoder(n_windows: int = 32) -> Callable[[bytes], np.ndarray]:
     return decode
 
 
-def pgm_feature_decoder(grid: int = 8) -> Callable[[bytes], np.ndarray]:
-    """payload → 64-dim perceptual feature (decode_pgm + image_feature)."""
-
-    def decode(payload: bytes) -> np.ndarray:
-        return image_feature(decode_pgm(payload), grid)
-
-    return decode
-
-
-def bmp_feature_decoder(grid: int = 8) -> Callable[[bytes], np.ndarray]:
-    """payload → 64-dim perceptual feature (decode_bmp + image_feature)."""
-
-    def decode(payload: bytes) -> np.ndarray:
-        return image_feature(decode_bmp(payload), grid)
-
-    return decode
-
-
-def png_feature_decoder(grid: int = 8) -> Callable[[bytes], np.ndarray]:
-    """payload → 64-dim perceptual feature (decode_png + image_feature).
-    Alpha never feeds luminance: RGBA drops to RGB, gray+alpha to gray."""
-
-    def decode(payload: bytes) -> np.ndarray:
-        arr = decode_png(payload)
-        if arr.ndim == 3 and arr.shape[2] == 2:
-            arr = arr[:, :, 0]
-        elif arr.ndim == 3 and arr.shape[2] == 4:
-            arr = arr[:, :, :3]
-        return image_feature(arr, grid)
-
-    return decode
-
-
 def decode_image(payload: bytes) -> np.ndarray:
     """Magic-byte dispatch over every codec-free image decoder
-    (PNG/JPEG/GIF/BMP/PPM/PGM) — the realistic crawl shape where one
-    binary column carries whatever formats the web served. Raises
-    ValueError on unrecognized magic (same totality contract as each
-    decoder)."""
+    (PNG/BMP/PPM/PGM) — the realistic crawl shape where one binary column
+    carries whatever formats the web served. JPEG and GIF magic raise
+    ``NotImplementedError`` via ``require_decoder`` (their production path
+    is ``pil_feature_decoder()``); unrecognized magic raises ValueError
+    (same totality contract as each decoder)."""
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
     if payload[:2] == b"\xff\xd8":
-        return decode_jpeg(payload)
+        require_decoder("JPEG")
     if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif(payload)
+        require_decoder("GIF")
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:2] == b"P6":
@@ -2180,7 +854,7 @@ def decode_image(payload: bytes) -> np.ndarray:
         return decode_pgm(payload)
     raise ValueError(
         f"unrecognized image magic {bytes(payload[:8])!r} "
-        "(codec-free formats: PNG/JPEG/GIF/BMP/PPM/PGM)"
+        "(codec-free formats: PNG/BMP/PPM/PGM)"
     )
 
 
@@ -2328,8 +1002,9 @@ def media_near_dup(
 ) -> DataFrame:
     """(id_a, id_b, cosine): near-duplicate media via hyperplane-LSH bucket
     join + exact cosine verify — the image-dedup workload named in the
-    reference's notes (/root/reference/notes_from_chris.txt:7), with the
-    decode stage stubbed."""
+    reference's notes. ``decode_fn`` maps one payload to its feature
+    (``image_feature_decoder()``, ``wav_feature_decoder()``, or the
+    PIL/soundfile adapters)."""
     from lsh_qd_spark.operators.ann import cosine_expr, hyperplane_coefficients, make_hyperplane_udf
     from lsh_qd_spark.operators.pairs import candidate_pairs
 

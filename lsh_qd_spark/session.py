@@ -22,6 +22,15 @@ def _resolve_master(master: str | None, env) -> str | None:
     return master
 
 
+def _default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap default: half of physical RAM (default: this host's),
+    floored at 1g and capped at 16g. A fixed 16g on a smaller host lets the
+    kernel OOM killer end the JVM before Java ever reports an OOM."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16, max(1, phys_bytes // 2 // (1 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "lsh_qd_spark",
     master: str | None = None,
@@ -87,7 +96,7 @@ def get_spark(
         # driver does not have (pass --driver-memory there instead).
         builder = builder.config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
     # Local-machine defaults, applied only when NOT spark-submitted (or
     # when the operator explicitly sets the env knob):

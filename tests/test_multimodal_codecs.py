@@ -1,5 +1,6 @@
-"""Real codec-free media decode: PPM/WAV round-trips, perceptual feature
-locality, and end-to-end image near-dup through Spark with actual decode."""
+"""Real codec-free media decode: PPM/PGM/BMP/PNG/WAV round-trips, perceptual
+feature locality, and end-to-end image near-dup through Spark with actual
+decode."""
 
 import numpy as np
 import pytest
@@ -11,8 +12,8 @@ from lsh_qd_spark.multimodal import (
     encode_ppm,
     encode_wav,
     image_feature,
+    image_feature_decoder,
     media_near_dup,
-    ppm_feature_decoder,
     wav_feature_decoder,
 )
 
@@ -90,7 +91,7 @@ def test_media_near_dup_real_ppm_decode(spark):
     got = {
         (r["id_a"], r["id_b"])
         for r in media_near_dup(
-            media, ppm_feature_decoder(), cosine_threshold=0.9
+            media, image_feature_decoder(), cosine_threshold=0.9
         ).collect()
     }
     assert got == truth
@@ -141,15 +142,11 @@ def test_bmp_roundtrip_both_raster_orders():
 def test_same_image_same_feature_across_formats():
     """PPM, PGM-of-gray, and BMP payloads of one image agree on the
     perceptual feature — the format layer is transparent to dedup."""
-    from lsh_qd_spark.multimodal import (
-        bmp_feature_decoder,
-        encode_bmp,
-        ppm_feature_decoder,
-    )
+    from lsh_qd_spark.multimodal import encode_bmp
 
     img = _image(13)
-    f_ppm = ppm_feature_decoder()(encode_ppm(img))
-    f_bmp = bmp_feature_decoder()(encode_bmp(img))
+    f_ppm = image_feature_decoder()(encode_ppm(img))
+    f_bmp = image_feature_decoder()(encode_bmp(img))
     assert float(f_ppm @ f_bmp) > 0.9999
 
 
@@ -310,7 +307,7 @@ def test_null_payload_row_skipped_not_fatal(spark):
         [(1, bytearray(img)), (2, None), (3, bytearray(img))],
         "media_id long, payload binary",
     )
-    out = extract_features(media, ppm_feature_decoder()).collect()
+    out = extract_features(media, image_feature_decoder()).collect()
     assert sorted(r["media_id"] for r in out) == [1, 3]
 
 
@@ -433,16 +430,16 @@ def test_png_error_paths():
 
 
 def test_png_feature_matches_other_formats():
-    from lsh_qd_spark.multimodal import encode_png, png_feature_decoder
+    from lsh_qd_spark.multimodal import encode_png
 
     img = _image(23)
-    f_png = png_feature_decoder()(encode_png(img, filter_type=2))
-    f_ppm = ppm_feature_decoder()(encode_ppm(img))
+    f_png = image_feature_decoder()(encode_png(img, filter_type=2))
+    f_ppm = image_feature_decoder()(encode_ppm(img))
     assert float(f_png @ f_ppm) > 0.9999
     # alpha plane must not leak into luminance
     rgba = np.dstack([img, np.random.default_rng(3).integers(
         0, 256, img.shape[:2], dtype=np.uint8)])
-    f_rgba = png_feature_decoder()(encode_png(rgba))
+    f_rgba = image_feature_decoder()(encode_png(rgba))
     assert float(f_rgba @ f_ppm) > 0.9999
 
 
@@ -450,7 +447,7 @@ def test_media_near_dup_real_png_decode(spark):
     """The production-adapter contract on a REAL compressed format,
     un-skipped: planted near-identical images ride as zlib-compressed
     PNG payloads through media_near_dup (VERDICT r3 #4 'done' bar)."""
-    from lsh_qd_spark.multimodal import encode_png, png_feature_decoder
+    from lsh_qd_spark.multimodal import encode_png
 
     rows, truth = [], set()
     rng = np.random.default_rng(29)
@@ -472,7 +469,7 @@ def test_media_near_dup_real_png_decode(spark):
     got = {
         (r["id_a"], r["id_b"])
         for r in media_near_dup(
-            media, png_feature_decoder(), cosine_threshold=0.9
+            media, image_feature_decoder(), cosine_threshold=0.9
         ).collect()
     }
     assert got == truth
@@ -520,7 +517,7 @@ def test_png_cross_validates_against_jvm_imageio(spark):
 
 # ---------------------------------------------------------------------------
 # Round-5 PNG additions: palette (PLTE/tRNS) support, decompression-bomb
-# guard, and the vectorized/native unfilter fast paths (VERDICT r4 #3/#4 +
+# guard, and the vectorized wavefront unfilter (VERDICT r4 #3/#4 +
 # ADVICE decompression-bomb item)
 
 
@@ -689,15 +686,43 @@ def test_png_decompression_bomb_rejected():
     assert np.array_equal(decode_png(encode_png(img, filter_type=4)), img)
 
 
-def test_png_unfilter_native_numpy_parity_and_speed():
-    """The optional cc-compiled unfilter kernel and the NumPy wavefront
-    must agree byte-exactly on random mixed-filter rasters, and the
-    wavefront itself must beat a per-byte Python reference loop by a wide
-    margin on the Paeth-heavy shape real crawl PNGs have (ratio-based so
-    host weather cancels out)."""
+def test_png_unfilter_wavefront_reference_parity_and_speed():
+    """The NumPy wavefront unfilter must agree byte-exactly with a per-byte
+    Python reference loop on random mixed-filter rasters, and beat it by a
+    wide margin on the Paeth-heavy shape real crawl PNGs have (ratio-based
+    so host weather cancels out)."""
     import time
 
-    from lsh_qd_spark.multimodal import _native_unfilter, _png_unfilter
+    from lsh_qd_spark.multimodal import _png_unfilter
+
+    def ref_per_byte(data_arr, h, w, ch):
+        stride = w * ch
+        out = np.zeros((h, stride), np.uint8)
+        prev = [0] * stride
+        for y in range(h):
+            f = int(data_arr[y, 0])
+            row = data_arr[y, 1:].tolist()
+            rec = [0] * stride
+            for x in range(stride):
+                a = rec[x - ch] if x >= ch else 0
+                b = prev[x]
+                c = prev[x - ch] if x >= ch else 0
+                if f == 0:
+                    pred = 0
+                elif f == 1:
+                    pred = a
+                elif f == 2:
+                    pred = b
+                elif f == 3:
+                    pred = (a + b) >> 1
+                else:
+                    p = a + b - c
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                    pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+                rec[x] = (row[x] + pred) & 255
+            out[y] = rec
+            prev = rec
+        return out.reshape(h, w, ch)
 
     rng = np.random.default_rng(43)
     for _ in range(25):
@@ -708,10 +733,8 @@ def test_png_unfilter_native_numpy_parity_and_speed():
         )
         da = rng.integers(0, 256, (h, w * ch + 1), dtype=np.uint8)
         da[:, 0] = rng.integers(0, 5, h)
-        got_np = _png_unfilter(da, h, w, ch, use_native=False)
-        if _native_unfilter() is not None:
-            got_nat = _png_unfilter(da, h, w, ch, use_native=True)
-            assert np.array_equal(got_np, got_nat), (h, w, ch)
+        got = _png_unfilter(da, h, w, ch)
+        assert np.array_equal(got, ref_per_byte(da, h, w, ch)), (h, w, ch)
 
     # speed: per-byte reference loop vs the shipped path, same host, same
     # input — the round-4 implementation was this reference loop
@@ -719,34 +742,15 @@ def test_png_unfilter_native_numpy_parity_and_speed():
     da = rng.integers(0, 256, (h, w * ch + 1), dtype=np.uint8)
     da[:, 0] = 4
 
-    def ref_per_byte(data_arr):
-        stride = w * ch
-        out = np.zeros((h, stride), np.uint8)
-        prev = [0] * stride
-        for y in range(h):
-            row = data_arr[y, 1:].tolist()
-            rec = [0] * stride
-            for x in range(stride):
-                a = rec[x - ch] if x >= ch else 0
-                b = prev[x]
-                c = prev[x - ch] if x >= ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                rec[x] = (row[x] + pred) & 255
-            out[y] = rec
-            prev = rec
-        return out.reshape(h, w, ch)
-
     t0 = time.perf_counter()
-    ref = ref_per_byte(da)
+    ref = ref_per_byte(da, h, w, ch)
     t_ref = time.perf_counter() - t0
     t0 = time.perf_counter()
-    got = _png_unfilter(da, h, w, ch)  # native if available, else wavefront
+    got = _png_unfilter(da, h, w, ch)
     t_new = time.perf_counter() - t0
     assert np.array_equal(ref, got)
-    # native is ~30x, pure wavefront ~3.5x; require >2x so the assertion
-    # holds on the wavefront-only path under any host weather
+    # the wavefront is ~3.5x; require >2x so the assertion holds under any
+    # host weather
     assert t_ref / t_new > 2.0, (t_ref, t_new)
 
 
@@ -754,11 +758,7 @@ def test_media_near_dup_palette_png(spark):
     """Planted palette-PNG dedup alongside the RGB/gray ones (VERDICT r4
     #4 'done' bar): palette-quantized crawl images ride through
     media_near_dup with real PLTE expansion in the decode."""
-    from lsh_qd_spark.multimodal import (
-        encode_png_palette,
-        media_near_dup,
-        png_feature_decoder,
-    )
+    from lsh_qd_spark.multimodal import encode_png_palette
 
     rng = np.random.default_rng(47)
     rows, truth = [], set()
@@ -786,7 +786,7 @@ def test_media_near_dup_palette_png(spark):
     got = {
         (r["id_a"], r["id_b"])
         for r in media_near_dup(
-            media, png_feature_decoder(), cosine_threshold=0.9
+            media, image_feature_decoder(), cosine_threshold=0.9
         ).collect()
     }
     assert got == truth
@@ -932,207 +932,27 @@ def test_png_depth_matrix_cross_validates_against_jvm_imageio(spark):
 
 
 # ---------------------------------------------------------------------------
-# Baseline JPEG (round 5): the dominant crawl image format, decoded with
-# pure NumPy — previously stubbed behind require_decoder("needs PIL")
+# One decoder over every codec-free image format
 
 
 def _smooth_image(seed: int, h: int = 40, w: int = 56) -> np.ndarray:
-    """JPEG-friendly structured content (random per-pixel noise is
-    adversarial to DCT quantization and would need useless tolerances).
-    The low-frequency structure is SEED-dependent — a coarse random grid
-    upscaled — so different seeds give genuinely different images (the
-    near-dup tests depend on cross-image features being far apart)."""
+    """Photo-like structured content: a coarse random grid upscaled plus
+    mild noise. The low-frequency structure is SEED-dependent, so
+    different seeds give genuinely different images (the near-dup tests
+    depend on cross-image features being far apart)."""
     r = np.random.default_rng(seed)
     coarse = r.uniform(0, 255, (5, 7, 3))
     img = np.kron(coarse, np.ones(((h + 4) // 5, (w + 6) // 7, 1)))[:h, :w]
     img = img + r.normal(0, 5, (h, w, 3))
     return np.clip(img, 0, 255).astype(np.uint8)
 
-
-def test_jpeg_roundtrip_quality_and_modes():
-    from lsh_qd_spark.multimodal import decode_jpeg, encode_jpeg_baseline
-
-    img = _smooth_image(71)
-    # quality 100 4:4:4 — quant tables collapse to 1: near-lossless
-    got = decode_jpeg(encode_jpeg_baseline(img, quality=100))
-    assert got.shape == img.shape
-    assert int(np.abs(got.astype(int) - img.astype(int)).max()) <= 3
-    # grayscale
-    g = img[:, :, 0]
-    got = decode_jpeg(encode_jpeg_baseline(g, quality=100))
-    assert got.shape == g.shape
-    assert int(np.abs(got.astype(int) - g.astype(int)).max()) <= 3
-    # lossy qualities, both subsamplings, odd dimensions, restart markers.
-    # 4:2:0 halves chroma resolution: on this content's hard color edges
-    # the loss vs the ORIGINAL is genuinely large (any decoder's would
-    # be) — the tight cross-decoder agreement lives in the ImageIO test.
-    odd = _smooth_image(72, h=37, w=51)
-    for kw, mean_tol in (
-        (dict(quality=90), 6),
-        (dict(quality=85, subsampling="420"), 14),
-        (dict(quality=90, restart_interval=3), 6),
-        (dict(quality=90, subsampling="420", restart_interval=2), 14),
-    ):
-        got = decode_jpeg(encode_jpeg_baseline(odd, **kw))
-        d = np.abs(got.astype(int) - odd.astype(int))
-        assert got.shape == odd.shape, kw
-        assert float(d.mean()) < mean_tol, (kw, d.max(), d.mean())
-        if "subsampling" not in kw:
-            assert int(d.max()) < 48, (kw, d.max())
-    # tiny images exercise the single-MCU edge
-    for shape in ((1, 1, 3), (3, 9, 3), (8, 8, 3)):
-        t = np.clip(
-            np.random.default_rng(73).normal(128, 20, shape), 0, 255
-        ).astype(np.uint8)
-        assert decode_jpeg(encode_jpeg_baseline(t, quality=100)).shape == shape
-
-
-def test_jpeg_error_paths_total():
-    import struct
-
-    from lsh_qd_spark.multimodal import decode_jpeg, encode_jpeg_baseline
-
-    img = _smooth_image(74, h=16, w=16)
-    payload = encode_jpeg_baseline(img, quality=90)
-    with pytest.raises(ValueError, match="SOI"):
-        decode_jpeg(b"\x89PNG not a jpeg")
-    with pytest.raises(ValueError):
-        decode_jpeg(payload[:30])  # truncated mid-segment
-    # genuinely unsupported process (SOF3 lossless) rejected loudly
-    sof_at = payload.index(b"\xff\xc0")
-    lossless = bytearray(payload)
-    lossless[sof_at + 1] = 0xC3
-    with pytest.raises(ValueError, match="unsupported JPEG process"):
-        decode_jpeg(bytes(lossless))
-    # a sequential stream RELABELED progressive (round 5 supports real
-    # SOF2): the scan header is inconsistent for progressive → ValueError
-    prog = bytearray(payload)
-    prog[sof_at + 1] = 0xC2
-    with pytest.raises(ValueError):
-        decode_jpeg(bytes(prog))
-    # corrupted entropy data: clean ValueError or a decoded (wrong) image,
-    # never an unhandled crash
-    rng = np.random.default_rng(75)
-    for _ in range(25):
-        broken = bytearray(payload)
-        pos = int(rng.integers(2, len(broken) - 2))
-        broken[pos] ^= 0xFF
-        try:
-            decode_jpeg(bytes(broken))
-        except ValueError:
-            pass
-    # absurd declared dimensions rejected before allocation
-    huge = bytearray(payload)
-    struct.pack_into(">HH", huge, sof_at + 5, 65000, 65000)
-    with pytest.raises(ValueError, match="cap"):
-        decode_jpeg(bytes(huge))
-
-
-def test_jpeg_cross_validates_against_jvm_imageio(spark):
-    """Two-sided independent oracle: javax.imageio DECODES our encoder's
-    bitstream (444, 420, restart markers — proving it is spec-legal) to
-    within IDCT/upsample rounding of our own decode, and our decoder
-    reads an ImageIO-WRITTEN (libjpeg-shaped, 4:2:0) file."""
-    from lsh_qd_spark.multimodal import decode_jpeg, encode_jpeg_baseline
-
-    jvm = spark._jvm
-    img = _smooth_image(76, h=24, w=31)
-
-    def jvm_read(payload: bytes) -> np.ndarray:
-        bis = jvm.java.io.ByteArrayInputStream(bytearray(payload))
-        bimg = jvm.javax.imageio.ImageIO.read(bis)
-        assert bimg is not None, "ImageIO could not parse our bitstream"
-        h, w = bimg.getHeight(), bimg.getWidth()
-        out = np.zeros((h, w, 3), dtype=np.uint8)
-        for y in range(h):
-            for x in range(w):
-                argb = bimg.getRGB(x, y)
-                out[y, x] = (
-                    (argb >> 16) & 255, (argb >> 8) & 255, argb & 255
-                )
-        return out
-
-    for kw, tol in (
-        (dict(quality=95), 4),  # 4:4:4 — IDCT rounding only
-        (dict(quality=90, restart_interval=2), 4),
-        (dict(quality=90, subsampling="420"), 16),  # fancy-vs-nearest chroma
-    ):
-        pay = encode_jpeg_baseline(img, **kw)
-        theirs = jvm_read(pay)
-        ours = decode_jpeg(pay)
-        d = np.abs(theirs.astype(int) - ours.astype(int))
-        assert int(d.max()) <= tol and float(d.mean()) < 3, (kw, d.max())
-
-    # ImageIO-written JPEG (default writer: 4:2:0) through OUR decoder
-    h, w = img.shape[:2]
-    bimg = jvm.java.awt.image.BufferedImage(
-        w, h, jvm.java.awt.image.BufferedImage.TYPE_INT_RGB
-    )
-    for y in range(h):
-        for x in range(w):
-            r, g, b = (int(v) for v in img[y, x])
-            v = (255 << 24) | (r << 16) | (g << 8) | b
-            if v >= 1 << 31:
-                v -= 1 << 32
-            bimg.setRGB(x, y, v)
-    bos = jvm.java.io.ByteArrayOutputStream()
-    jvm.javax.imageio.ImageIO.write(bimg, "jpg", bos)
-    pay = bytes(bos.toByteArray())
-    ours = decode_jpeg(pay)
-    theirs = jvm_read(pay)
-    d = np.abs(theirs.astype(int) - ours.astype(int))
-    assert int(d.max()) <= 24 and float(d.mean()) < 4, (d.max(), d.mean())
-
-
-def test_media_near_dup_real_jpeg_decode(spark):
-    """The production-adapter contract on REAL lossy-compressed JPEG
-    payloads: planted near-identical images ride through media_near_dup
-    with actual entropy decode on executors."""
-    from lsh_qd_spark.multimodal import (
-        encode_jpeg_baseline,
-        jpeg_feature_decoder,
-        media_near_dup,
-    )
-
-    rows, truth = [], set()
-    rng = np.random.default_rng(77)
-    for i in range(15):
-        img = _smooth_image(500 + i, h=48, w=64)
-        noisy = np.clip(
-            img.astype(np.int16) + rng.integers(-5, 6, img.shape), 0, 255
-        ).astype(np.uint8)
-        sub = "420" if i % 2 else "444"
-        rows.append(
-            (2 * i, "image", encode_jpeg_baseline(img, quality=92),
-             "image/jpeg", 64, 48, None)
-        )
-        rows.append(
-            (2 * i + 1, "image",
-             encode_jpeg_baseline(noisy, quality=88, subsampling=sub),
-             "image/jpeg", 64, 48, None)
-        )
-        truth.add((2 * i, 2 * i + 1))
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, mime string, "
-        "width int, height int, duration_ms long",
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in media_near_dup(
-            media, jpeg_feature_decoder(), cosine_threshold=0.9
-        ).collect()
-    }
-    assert got == truth
-
-
 def test_media_near_dup_all_formats_one_decoder(spark):
     """One image_feature_decoder() over a column mixing every codec-free
-    format — PNG (palette + interlaced), JPEG (420), BMP, PPM — recovers
-    the planted pairs across format boundaries."""
+    format — PNG (plain + interlaced), PGM, BMP, PPM — recovers the planted
+    pairs across format boundaries."""
     from lsh_qd_spark.multimodal import (
         encode_bmp,
-        encode_jpeg_baseline,
+        encode_pgm,
         encode_png,
         encode_png_adam7,
         encode_png_palette,
@@ -1149,7 +969,7 @@ def test_media_near_dup_all_formats_one_decoder(spark):
         ).astype(np.uint8)
         encoders = [
             lambda a: encode_png(a, filter_type=4),
-            lambda a: encode_jpeg_baseline(a, quality=92, subsampling="420"),
+            lambda a: encode_pgm(np.round(a.mean(axis=2)).astype(np.uint8)),
             lambda a: encode_bmp(a),
             lambda a: encode_ppm(a),
             lambda a: encode_png_adam7(a, filter_type=2),
@@ -1173,184 +993,14 @@ def test_media_near_dup_all_formats_one_decoder(spark):
         ).collect()
     }
     assert got == truth
-    # unknown magic raises loudly
+    # unknown magic raises loudly; JPEG/GIF magic points at the PIL adapter
     from lsh_qd_spark.multimodal import decode_image
 
     with pytest.raises(ValueError, match="unrecognized image magic"):
         decode_image(b"RIFF0000WEBPVP8 not supported")
-
-
-def test_jpeg_progressive_cross_validates_against_jvm_imageio(spark):
-    """Progressive (SOF2) JPEG: ImageIO writes a real multi-scan
-    progressive stream (spectral selection + successive approximation,
-    the web's standard progressive shape); our decoder must agree with
-    ImageIO's own decode to within IDCT/upsample rounding."""
-    from lsh_qd_spark.multimodal import decode_jpeg
-
-    jvm = spark._jvm
-
-    def to_bimg(img):
-        h, w = img.shape[:2]
-        b = jvm.java.awt.image.BufferedImage(
-            w, h, jvm.java.awt.image.BufferedImage.TYPE_INT_RGB
-        )
-        for y in range(h):
-            for x in range(w):
-                r, g, bl = (int(v) for v in img[y, x])
-                v = (255 << 24) | (r << 16) | (g << 8) | bl
-                if v >= 1 << 31:
-                    v -= 1 << 32
-                b.setRGB(x, y, v)
-        return b
-
-    def write_prog(img):
-        ImageIO = jvm.javax.imageio.ImageIO
-        writer = ImageIO.getImageWritersByFormatName("jpg").next()
-        param = writer.getDefaultWriteParam()
-        param.setProgressiveMode(
-            jvm.javax.imageio.ImageWriteParam.MODE_DEFAULT
-        )
-        bos = jvm.java.io.ByteArrayOutputStream()
-        ios = ImageIO.createImageOutputStream(bos)
-        writer.setOutput(ios)
-        writer.write(
-            None, jvm.javax.imageio.IIOImage(to_bimg(img), None, None), param
-        )
-        ios.flush()
-        return bytes(bos.toByteArray())
-
-    def jvm_read(payload):
-        bis = jvm.java.io.ByteArrayInputStream(bytearray(payload))
-        bimg = jvm.javax.imageio.ImageIO.read(bis)
-        h, w = bimg.getHeight(), bimg.getWidth()
-        out = np.zeros((h, w, 3), dtype=np.uint8)
-        for y in range(h):
-            for x in range(w):
-                argb = bimg.getRGB(x, y)
-                out[y, x] = (
-                    (argb >> 16) & 255, (argb >> 8) & 255, argb & 255
-                )
-        return out
-
-    for h, w, seed in ((16, 16, 2), (40, 56, 3), (9, 13, 4), (24, 31, 1)):
-        img = _smooth_image(seed, h=h, w=w)
-        pay = write_prog(img)
-        assert b"\xff\xc2" in pay, "fixture is not progressive"
-        ours = decode_jpeg(pay)
-        theirs = jvm_read(pay)
-        d = np.abs(theirs.astype(int) - ours.astype(int))
-        assert int(d.max()) <= 16 and float(d.mean()) < 2, (
-            (h, w), d.max(), d.mean()
-        )
-
-
-# ---------------------------------------------------------------------------
-# GIF (round 5): LZW + palettes + interlace + transparency
-
-
-def test_gif_roundtrip_interlace_transparency():
-    from lsh_qd_spark.multimodal import decode_gif, decode_image, encode_gif
-
-    rng = np.random.default_rng(91)
-    for trial in range(12):
-        n = int(rng.integers(1, 257))
-        h, w = int(rng.integers(1, 40)), int(rng.integers(1, 40))
-        pal = rng.integers(0, 256, (n, 3), dtype=np.uint8)
-        idx = rng.integers(0, n, (h, w), dtype=np.uint8)
-        interlace = bool(trial % 2)
-        tr = int(rng.integers(0, n)) if trial % 3 == 0 else None
-        got = decode_gif(
-            encode_gif(idx, pal, transparent=tr, interlace=interlace)
-        )
-        if tr is None:
-            assert got.shape == (h, w, 3)
-            assert np.array_equal(got, pal[idx]), (trial, h, w)
-        else:
-            assert got.shape == (h, w, 4)
-            assert np.array_equal(got[:, :, :3], pal[idx])
-            assert np.array_equal(
-                got[:, :, 3],
-                np.where(idx == tr, 0, 255).astype(np.uint8),
-            )
-    # the magic-byte dispatcher routes GIF too
-    pal = np.arange(12, dtype=np.uint8).reshape(4, 3)
-    idx = np.arange(8, dtype=np.uint8).reshape(2, 4) % 4
-    assert np.array_equal(decode_image(encode_gif(idx, pal)), pal[idx])
-
-
-def test_gif_error_paths_total():
-    from lsh_qd_spark.multimodal import decode_gif, encode_gif
-
-    pal = np.arange(24, dtype=np.uint8).reshape(8, 3)
-    idx = np.zeros((5, 6), dtype=np.uint8)
-    payload = encode_gif(idx, pal)
-    with pytest.raises(ValueError, match="not a GIF"):
-        decode_gif(b"PNG nope")
-    with pytest.raises(ValueError):
-        decode_gif(payload[:20])  # truncated inside the color table/blocks
-    # byte-flips: clean ValueError or a (wrong) image, never a crash
-    rng = np.random.default_rng(92)
-    for _ in range(40):
-        broken = bytearray(payload)
-        pos = int(rng.integers(6, len(broken)))
-        broken[pos] ^= 0xFF
-        try:
-            decode_gif(bytes(broken))
-        except ValueError:
-            pass
-
-
-def test_gif_cross_validates_against_jvm_imageio(spark):
-    """Two-sided oracle, EXACT both ways (GIF is lossless past
-    quantization): ImageIO reads our encoder's trivial-LZW output
-    byte-exact (plain + interlaced), and our decoder reads an
-    ImageIO-written GIF (real growing-table LZW) exactly as ImageIO
-    itself re-reads it."""
-    from lsh_qd_spark.multimodal import decode_gif, encode_gif
-
-    jvm = spark._jvm
-    rng = np.random.default_rng(93)
-
-    def jvm_read_rgb(payload, h, w):
-        bis = jvm.java.io.ByteArrayInputStream(bytearray(payload))
-        bimg = jvm.javax.imageio.ImageIO.read(bis)
-        assert bimg is not None, "ImageIO could not parse the GIF"
-        assert (bimg.getHeight(), bimg.getWidth()) == (h, w)
-        out = np.zeros((h, w, 3), dtype=np.uint8)
-        for y in range(h):
-            for x in range(w):
-                argb = bimg.getRGB(x, y)
-                out[y, x] = (
-                    (argb >> 16) & 255, (argb >> 8) & 255, argb & 255
-                )
-        return out
-
-    pal = rng.integers(0, 256, (31, 3), dtype=np.uint8)
-    idx = rng.integers(0, 31, (14, 19), dtype=np.uint8)
-    for interlace in (False, True):
-        pay = encode_gif(idx, pal, interlace=interlace)
-        assert np.array_equal(jvm_read_rgb(pay, 14, 19), pal[idx]), interlace
-
-    h, w = 21, 17
-    img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    bimg = jvm.java.awt.image.BufferedImage(
-        w, h, jvm.java.awt.image.BufferedImage.TYPE_INT_RGB
-    )
-    for y in range(h):
-        for x in range(w):
-            r, g, b = (int(v) for v in img[y, x])
-            v = (255 << 24) | (r << 16) | (g << 8) | b
-            if v >= 1 << 31:
-                v -= 1 << 32
-            bimg.setRGB(x, y, v)
-    bos = jvm.java.io.ByteArrayOutputStream()
-    jvm.javax.imageio.ImageIO.write(bimg, "gif", bos)
-    pay = bytes(bos.toByteArray())
-    ours = decode_gif(pay)
-    theirs = jvm_read_rgb(pay, h, w)
-    assert np.array_equal(ours[:, :, :3], theirs)
-
-
+    for magic in (b"\xff\xd8\xff\xe0", b"GIF87a", b"GIF89a"):
+        with pytest.raises(NotImplementedError, match="pil_feature_decoder"):
+            decode_image(magic + bytes(32))
 def test_wav_all_pcm_widths():
     """decode_wav handles every stdlib-PCM sample width (8/16/24/32-bit),
     mono and stereo-downmixed, to the same normalized float signal."""
@@ -1393,140 +1043,3 @@ def test_wav_all_pcm_widths():
         # stereo downmix of identical channels reproduces the mono signal
         y2, _ = decode_wav(make(width, n_ch=2))
         assert float(np.abs(y2 - x).max()) < tol, width
-
-
-def test_gif_frame_dimension_bomb_rejected():
-    """Round-5 review fix: a tiny logical screen with a huge image
-    descriptor must be rejected before any pixel allocation."""
-    import struct
-
-    from lsh_qd_spark.multimodal import decode_gif
-
-    payload = (
-        b"GIF89a"
-        + struct.pack("<HHBBB", 1, 1, 0x80, 0, 0)  # 1x1 screen, 2-entry GCT
-        + bytes(6)  # global color table
-        + struct.pack("<BHHHHB", 0x2C, 0, 0, 65535, 65535, 0)  # huge frame
-        + bytes([2, 1, 0x44, 0])  # min_code + one sub-block + terminator
-        + b"\x3b"
-    )
-    with pytest.raises(ValueError, match="frame dimensions"):
-        decode_gif(payload)
-
-
-def test_gif_truncated_descriptor_is_valueerror():
-    """Round-5 review fix: truncation inside the image descriptor must be
-    a ValueError, not a struct.error escaping the totality contract."""
-    import struct
-
-    from lsh_qd_spark.multimodal import decode_gif
-
-    payload = b"GIF89a" + struct.pack("<HHBBB", 4, 4, 0, 0, 0) + b"\x2c\x00"
-    with pytest.raises(ValueError):
-        decode_gif(payload)
-
-
-def test_jpeg_fill_bytes_before_restart_marker():
-    """Round-5 review fix: T.81 B.1.1.2 allows any number of 0xFF fill
-    bytes before a marker — a conformant stream padded before its RSTn
-    markers must still decode."""
-    from lsh_qd_spark.multimodal import decode_jpeg, encode_jpeg_baseline
-
-    img = _smooth_image(99, h=24, w=24)
-    payload = encode_jpeg_baseline(img, quality=95, restart_interval=1)
-    clean = decode_jpeg(payload)
-    # inject a fill byte before every restart marker
-    padded = bytearray()
-    i = 0
-    while i < len(payload):
-        if (
-            payload[i] == 0xFF
-            and i + 1 < len(payload)
-            and 0xD0 <= payload[i + 1] <= 0xD7
-        ):
-            padded.append(0xFF)  # fill byte
-        padded.append(payload[i])
-        i += 1
-    got = decode_jpeg(bytes(padded))
-    assert np.array_equal(got, clean)
-
-
-def test_jpeg_cmyk_and_dimension_cap_rejected_early():
-    """Round-5 review fix: unsupported component counts and over-cap
-    dimensions fail from the header, before entropy decode."""
-    import struct
-
-    from lsh_qd_spark.multimodal import decode_jpeg, encode_jpeg_baseline
-
-    img = _smooth_image(98, h=8, w=8)
-    payload = encode_jpeg_baseline(img, quality=90)
-    sof_at = payload.index(b"\xff\xc0")
-
-    # a well-formed 4-component (CMYK-shaped) header: rejected by the
-    # count check with no DQT/DHT/entropy work at all
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    sof4 = struct.pack(">BHHB", 8, 8, 8, 4) + bytes(
-        [1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1, 4, 0x11, 1]
-    )
-    sos4 = bytes([4, 1, 0, 2, 0, 3, 0, 4, 0, 0, 63, 0])
-    cmyk = b"\xff\xd8" + seg(0xC0, sof4) + seg(0xDA, sos4) + b"\xff\xd9"
-    with pytest.raises(ValueError, match="component count"):
-        decode_jpeg(cmyk)
-    huge = bytearray(payload)
-    struct.pack_into(">HH", huge, sof_at + 5, 40000, 40000)
-    with pytest.raises(ValueError, match="cap"):
-        decode_jpeg(bytes(huge))
-
-
-def test_jpeg_grayscale_with_chroma_sampling_factors():
-    """T.81: a one-component sequential scan is non-interleaved over the
-    component's REAL block grid. A legal grayscale JPEG declaring H/V=2
-    (patched SOF byte) must decode to the same pixels as its H/V=1 twin
-    — it previously failed with 'invalid JPEG huffman code' because the
-    decoder walked the sampling-padded MCU grid (ADVICE.md round 5)."""
-    import numpy as np
-
-    from lsh_qd_spark.multimodal import decode_jpeg, encode_jpeg_baseline
-
-    rng = np.random.default_rng(3)
-    g = rng.integers(0, 256, (24, 17), dtype=np.uint8)
-    pay = encode_jpeg_baseline(g, quality=95)
-    base = decode_jpeg(pay)
-    buf = bytearray(pay)
-    i = 2
-    patched = None
-    while i < len(buf) - 1:
-        marker = buf[i + 1]
-        seglen = (buf[i + 2] << 8) | buf[i + 3]
-        if marker == 0xC0:  # SOF0: ... nf(1), then per-comp id, HV, Tq
-            assert buf[i + 9] == 1  # one component
-            assert buf[i + 11] == 0x11
-            buf[i + 11] = 0x22
-            patched = bytes(buf)
-            break
-        i += 2 + seglen
-    assert patched is not None
-    out = decode_jpeg(patched)
-    assert out.shape == base.shape
-    assert np.array_equal(out, base)
-
-
-def test_jpeg_dequantize_does_not_wrap_int32():
-    """A large accumulated DC predictor times a 16-bit quant entry can
-    exceed int32; the dequantize must widen to int64 so the sample
-    saturates (255) instead of wrapping negative (0) — ADVICE.md."""
-    import numpy as np
-
-    from lsh_qd_spark.multimodal import _jpeg_reconstruct
-
-    coef = np.zeros((1, 64), dtype=np.int32)
-    coef[0, 0] = 300_000  # legal int32 DC accumulation
-    q = np.zeros(64, dtype=np.int64)
-    q[0] = 10_000  # 16-bit DQT entry; product 3e9 wraps int32
-    st = {"coef": coef, "q": q, "bw": 1, "bh": 1, "H": 1, "V": 1}
-    plane = _jpeg_reconstruct(8, 8, [st], 1, 1)
-    assert plane.shape == (8, 8)
-    # huge positive DC -> every sample saturates high
-    assert (plane == 255).all()

@@ -12,6 +12,7 @@ reference coefficient stream — pair sets must agree exactly.
 
 import importlib.util
 import itertools
+import os
 from collections import defaultdict
 
 import numpy as np
@@ -66,6 +67,8 @@ def reference_module():
     spec = importlib.util.spec_from_file_location(
         "lsh_qd_ref", "/root/reference/lsh-qd.py"
     )
+    if not os.path.exists(spec.origin):
+        pytest.skip(f"reference sources not present: {spec.origin}")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

@@ -54,7 +54,9 @@ def test_bare_python_gets_sandbox_tuning(monkeypatch):
     fake = _capture(monkeypatch, {})
     assert fake.confs["spark.local.dir"] == "/dev/shm/spark_local"
     assert fake.confs["spark.sql.files.maxPartitionBytes"] == "16m"
-    assert fake.confs["spark.driver.memory"] == "16g"
+    assert (
+        fake.confs["spark.driver.memory"] == session_mod._default_driver_memory()
+    )
     assert fake.master_val == "local[*]"
 
 
@@ -77,3 +79,10 @@ def test_spark_submit_honors_explicit_knobs(monkeypatch):
     )
     assert fake.confs["spark.local.dir"] == "/mnt/ssd/spark"
     assert fake.confs["spark.sql.files.maxPartitionBytes"] == "128m"
+
+
+def test_default_driver_memory_is_half_of_ram_capped():
+    gib = 1 << 30
+    assert session_mod._default_driver_memory(15 * gib) == "7g"
+    assert session_mod._default_driver_memory(64 * gib) == "16g"
+    assert session_mod._default_driver_memory(gib) == "1g"
