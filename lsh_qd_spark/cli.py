@@ -13,8 +13,9 @@ Batch mode runs the full staged pipeline (resumable when
 ``--checkpoint-dir`` is set) and writes three result tables under the
 output ref: ``verified`` (the duplicate-pair evidence), ``clusters``
 (doc_id → cluster_id), ``survivors`` (one kept doc per cluster — the
-collapsed corpus). Streaming modes run the ``stream_dedup`` facade over a
-file source until exhausted (``availableNow``), then write the same tail.
+collapsed corpus). ``--mode incremental`` streams a file source through
+``IncrementalDedup`` until exhausted (``availableNow``), then writes the
+same tail from its sink.
 
 Everything here is thin argument plumbing over the library operators —
 the CLI adds no semantics of its own, so library users and CLI users get
@@ -42,7 +43,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--output", required=True,
                    help="output root: directory path or catalog namespace prefix")
     p.add_argument("--mode", default="batch",
-                   choices=["batch", "incremental", "stateful"])
+                   choices=["batch", "incremental"])
     p.add_argument("--text-col", default="text")
     p.add_argument("--id-col", default="doc_id")
     p.add_argument("--shingle-k", type=int, default=5)
@@ -392,8 +393,7 @@ def _input_token(args) -> str:
 
 def run_streaming(spark, args) -> dict:
     from lsh_qd_spark.io import read_pages
-    from lsh_qd_spark.streaming import stream_dedup
-    from lsh_qd_spark.streaming.facade import save_progress
+    from lsh_qd_spark.streaming import IncrementalDedup, save_progress
 
     if args.checkpoint_dir is None:
         raise SystemExit("--checkpoint-dir (work dir) required for streaming")
@@ -429,8 +429,8 @@ def run_streaming(spark, args) -> dict:
             "--text-col/--id-col are batch-mode only: streaming reads "
             "the fixed pages schema (doc_id, text)"
         )
-    sd = stream_dedup(make_config(args), args.checkpoint_dir, mode=args.mode)
-    q = sd.start(spark, args.input)
+    inc = IncrementalDedup(make_config(args), args.checkpoint_dir)
+    q = inc.start(spark, args.input)
     q.awaitTermination()
     pages = read_pages(spark, args.input)
     # results BEFORE telemetry: save_progress is the least important
@@ -442,7 +442,7 @@ def run_streaming(spark, args) -> dict:
         spark,
         args,
         pages,
-        sd.verified_pairs(spark, pages, args.text_col, args.id_col),
+        inc.verified_pairs(spark, pages, args.text_col, args.id_col),
     )
     save_progress(q, args.checkpoint_dir)
     return {"mode": args.mode}

@@ -58,8 +58,8 @@ def counted_plus_stars(counted: DataFrame, star_pairs: DataFrame) -> DataFrame:
     (small buckets) and starred (a mega bucket in another band) keeps only
     the counted row; surviving star rows carry sentinel ``n_bands=0`` and
     ``via_star=True``. THE tail shared by every pair producer
-    (candidate_pairs, streaming facade, stateful read side) so the
-    contract cannot drift between them.
+    (candidate_pairs, ``IncrementalDedup.pairs``) so the contract cannot
+    drift between them.
 
     ``counted`` carries (id_a, id_b, n_bands) with the alpha cut already
     applied; ``star_pairs`` is the distinct (id_a, id_b) star edges.

@@ -1,3 +1,3 @@
-from lsh_qd_spark.streaming.facade import StreamDedup, stream_dedup
+from lsh_qd_spark.streaming.incremental import IncrementalDedup, save_progress
 
-__all__ = ["StreamDedup", "stream_dedup"]
+__all__ = ["IncrementalDedup", "save_progress"]

@@ -31,19 +31,44 @@ Scale notes (100 TB crawl):
 Exactly-once-ish: Structured Streaming checkpointing replays failed
 batches; both sinks are epoch-partitioned with dynamic overwrite, so a
 replayed epoch rewrites its own partitions idempotently.
+
+Batch tail over the sink: ``pairs()`` normalizes the hits to the batch
+``candidate_pairs`` shape ``(id_a, id_b, n_bands, via_star)`` with
+canonical ``id_a < id_b``, so Jaccard verify and connected components are
+literally the batch operators:
+
+    inc = IncrementalDedup(config, work_dir)
+    inc.start(spark, source_dir).awaitTermination()
+    inc.clusters(spark, docs)         # alpha count → verify → components
 """
 
 from __future__ import annotations
 
 import json
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lsh_qd_spark.config import DedupConfig
-from lsh_qd_spark.io import list_child_names, read_stage, write_stage
-from lsh_qd_spark.operators.pairs import BIG_KEY_BROADCAST_CAP
+from lsh_qd_spark.io import (
+    _join_ref,
+    _read_text,
+    _write_text,
+    check_compat_meta,
+    list_child_names,
+    path_exists,
+    read_stage,
+    write_compat_meta,
+    write_stage,
+)
+from lsh_qd_spark.operators.cluster import connected_components
+from lsh_qd_spark.operators.pairs import (
+    BIG_KEY_BROADCAST_CAP,
+    counted_plus_stars,
+)
+from lsh_qd_spark.operators.verify import verify_pairs_text
 from lsh_qd_spark.plans.pipeline import DedupPipeline
 
 PAGES_STREAM_SCHEMA = (
@@ -60,17 +85,10 @@ HITS_SCHEMA = (
 class IncrementalDedup:
     """foreachBatch-driven incremental dedup over a streaming pages source."""
 
-    def __init__(
-        self,
-        config: DedupConfig,
-        work_dir: str,
-        n_shards: int = 64,
-        record_metrics: bool = True,
-    ):
+    def __init__(self, config: DedupConfig, work_dir: str, n_shards: int = 64):
         self.config = config
         self.work_dir = work_dir
         self.n_shards = n_shards
-        self.record_metrics = record_metrics
         self.index_dir = os.path.join(work_dir, "bucket_index")
         self.hits_dir = os.path.join(work_dir, "dup_hits")
         self.metrics_dir = os.path.join(work_dir, "metrics")
@@ -94,8 +112,6 @@ class IncrementalDedup:
         return shard_expr(self.n_shards)
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from lsh_qd_spark.io import check_compat_meta, write_compat_meta
-
         # a resumed stream joining new-kernel band keys against an index
         # persisted by an older kernel/config would detect zero duplicates
         # with no error — fail loudly before touching the sinks.
@@ -260,8 +276,7 @@ class IncrementalDedup:
             # the accumulated index and the current batch contributes its
             # buckets to the build side twice (from_index True and False),
             # which would double-count n_bands and let sub-alpha pairs
-            # through. Per-band dedup restores the alpha semantics (same
-            # fix as streaming/stateful.pairs()).
+            # through. Per-band dedup restores the alpha semantics.
             .dropDuplicates(["doc_id", "existing_doc", "band_idx"])
             .groupBy(F.col("doc_id").alias("new_doc"), F.col("existing_doc"))
             .agg(F.count("*").alias("n_bands"))
@@ -288,53 +303,50 @@ class IncrementalDedup:
         write_stage(
             buckets, self.index_dir, "dynamic_overwrite", ["epoch", "shard"]
         )
-        if self.record_metrics:
-            # Per-epoch lineage + metrics (north rule): per-shard bucket-row
-            # counts (the index partitions this epoch wrote) + hit count.
-            # Cheap: buckets is persisted, and the hit count reads only the
-            # freshly-written epoch partition. The file is keyed by epoch,
-            # so a replayed epoch overwrites its own metrics idempotently —
-            # same contract as the data sinks.
-            shard_rows = {
-                str(r["shard"]): r["n"]
-                for r in buckets.groupBy("shard")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            # Count ONLY the epoch partition this batch just wrote — NOT
-            # self.hits(): that reads the whole sink with mergeSchema, so
-            # per-batch metrics cost would grow with stream age (every
-            # footer ever written, re-listed each trigger — quadratic
-            # cumulative over a long backfill). The fresh partition was
-            # written by THIS code generation, so no schema merge is
-            # needed; a zero-duplicate batch writes no partition dir at
-            # all (dynamic overwrite of an empty frame), hence the
-            # path_exists guard (a raw read_stage on a missing dir would
-            # kill the streaming query from inside foreachBatch).
-            from lsh_qd_spark.io import _join_ref, _write_text, path_exists
+        # Per-epoch lineage + metrics (north rule): per-shard bucket-row
+        # counts (the index partitions this epoch wrote) + hit count.
+        # Cheap: buckets is persisted, and the hit count reads only the
+        # freshly-written epoch partition. The file is keyed by epoch,
+        # so a replayed epoch overwrites its own metrics idempotently —
+        # same contract as the data sinks.
+        shard_rows = {
+            str(r["shard"]): r["n"]
+            for r in buckets.groupBy("shard")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        # Count ONLY the epoch partition this batch just wrote — NOT
+        # self.hits(): that reads the whole sink with mergeSchema, so
+        # per-batch metrics cost would grow with stream age (every
+        # footer ever written, re-listed each trigger — quadratic
+        # cumulative over a long backfill). The fresh partition was
+        # written by THIS code generation, so no schema merge is
+        # needed; a zero-duplicate batch writes no partition dir at
+        # all (dynamic overwrite of an empty frame), hence the
+        # path_exists guard (a raw read_stage on a missing dir would
+        # kill the streaming query from inside foreachBatch).
+        epoch_ref = _join_ref(self.hits_dir, f"epoch={epoch_id}")
+        n_hits = (
+            read_stage(spark, epoch_ref).count()
+            if path_exists(epoch_ref, spark)
+            else 0
+        )
 
-            epoch_ref = _join_ref(self.hits_dir, f"epoch={epoch_id}")
-            n_hits = (
-                read_stage(spark, epoch_ref).count()
-                if path_exists(epoch_ref, spark)
-                else 0
-            )
-
-            # _write_text is URI-safe: os.makedirs on an s3a://... metrics
-            # dir would create a junk LOCAL directory and "succeed"
-            _write_text(
-                _join_ref(self.metrics_dir, f"epoch_{epoch_id}.json"),
-                json.dumps(
-                    {
-                        "epoch": epoch_id,
-                        "bucket_rows": sum(shard_rows.values()),
-                        "hits": n_hits,
-                        "shard_rows": shard_rows,
-                    },
-                    indent=2,
-                ),
-                spark,
-            )
+        # _write_text is URI-safe: os.makedirs on an s3a://... metrics
+        # dir would create a junk LOCAL directory and "succeed"
+        _write_text(
+            _join_ref(self.metrics_dir, f"epoch_{epoch_id}.json"),
+            json.dumps(
+                {
+                    "epoch": epoch_id,
+                    "bucket_rows": sum(shard_rows.values()),
+                    "hits": n_hits,
+                    "shard_rows": shard_rows,
+                },
+                indent=2,
+            ),
+            spark,
+        )
 
     def start(
         self,
@@ -382,7 +394,7 @@ class IncrementalDedup:
             out = out.withColumn("via_star", F.lit(False))
         else:
             # mixed sink: legacy epochs decode via_star as NULL, and the
-            # facade's where(~via_star)/where(via_star) split would drop
+            # where(~via_star)/where(via_star) split in pairs() would drop
             # those rows entirely (NULL is neither) — every pre-upgrade
             # duplicate would vanish with no error. Legacy rows predate
             # star edges, so False is exact, not a guess.
@@ -392,3 +404,119 @@ class IncrementalDedup:
         return out.select(
             "new_doc", "existing_doc", "n_bands", "via_star", "epoch"
         )
+
+    # --- batch tail over the sink -------------------------------------
+
+    def pairs(self, spark: SparkSession) -> DataFrame:
+        """(id_a, id_b, n_bands, via_star), canonical ``id_a < id_b`` —
+        the batch ``candidate_pairs`` shape."""
+        hits = self.hits(spark)
+        # hits are already alpha-filtered per epoch and canonicalized
+        # (existing < new for intra-batch; any orientation vs the index);
+        # a re-crawled doc_id can surface the same pair in a later epoch,
+        # so aggregate with max(n_bands) rather than trusting uniqueness.
+        canon = hits.select(
+            F.least("new_doc", "existing_doc").alias("id_a"),
+            F.greatest("new_doc", "existing_doc").alias("id_b"),
+            "n_bands",
+            "via_star",
+        )
+        counted = (
+            canon.where(~F.col("via_star"))
+            .groupBy("id_a", "id_b")
+            .agg(F.max("n_bands").alias("n_bands"))
+        )
+        # mega-bucket star hits keep the sentinel n_bands=0 and yield to a
+        # counted row for the same pair — the shared consumer-contract tail
+        stars = canon.where(F.col("via_star")).select("id_a", "id_b").distinct()
+        return counted_plus_stars(counted, stars)
+
+    def verified_pairs(
+        self,
+        spark: SparkSession,
+        docs: DataFrame,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+    ) -> DataFrame:
+        """Candidate pairs Jaccard-verified against document text — the
+        same fused kernel as the batch pipeline's verify stage."""
+        # Materialize the pairs aggregation before verify consumes it:
+        # verify's auto path counts distinct candidate ids, sums their
+        # text bytes for its exact fetch gate, and joins the pairs twice —
+        # consumers that would each re-run the hits-scan → canonicalize →
+        # groupBy chain on a lazy plan. The batch pipeline persists its
+        # pairs stage for the same reason; post-alpha pairs are small, so
+        # eager localCheckpoint (reference-tracked blocks, no
+        # session-lifetime leak) fits here.
+        return verify_pairs_text(
+            self.pairs(spark).localCheckpoint(eager=True),
+            docs,
+            self.config.jaccard_threshold,
+            self.config.shingle_k,
+            id_col=id_col,
+            text_col=text_col,
+            # honor the same execution knobs the batch pipeline forwards —
+            # a memory-constrained config (fetch='shuffle' or a small
+            # broadcast cap) must behave identically in streaming mode
+            fetch=self.config.verify_fetch,
+            broadcast_ids_cap=self.config.verify_broadcast_ids_cap,
+        )
+
+    def clusters(
+        self,
+        spark: SparkSession,
+        docs: DataFrame,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+    ) -> DataFrame:
+        """(doc_id, cluster_id) duplicate clusters over the verified graph."""
+        # connected_components consumes its edges twice (the count deciding
+        # driver-vs-distributed, then the collect or sym-union); it
+        # checkpoints the lazy verify plan internally so the Jaccard kernel
+        # runs once.
+        return connected_components(
+            self.verified_pairs(spark, docs, text_col, id_col)
+        )
+
+
+def save_progress(query, work_dir: str) -> str:
+    """Persist a finished streaming query's progress telemetry
+    (``recentProgress``: per-batch numInputRows and durations) to
+    ``<work_dir>/metrics/query_progress.json`` — the
+    Structured-Streaming-native half of the north rule's per-partition
+    lineage + metrics; ``process_batch`` writes the per-epoch shard
+    lineage next to it.
+
+    ``recentProgress`` is a RING BUFFER (Spark keeps the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` entries, default 100),
+    so this function MERGES with any previously-saved file, keyed by
+    batchId: call it after each ``awaitTermination`` and a long backfill's
+    full history accumulates instead of silently truncating to the tail."""
+    # URI-safe IO throughout: a remote work_dir (hdfs://, s3a://) handled
+    # with driver-local os.path would create a junk LOCAL "s3a:/..."
+    # directory, "succeed", and lose the telemetry when the driver
+    # container exits — the hazard process_batch's metrics writer avoids
+    # the same way.
+    path = _join_ref(_join_ref(work_dir, "metrics"), "query_progress.json")
+    by_batch: dict = {}
+    if path_exists(path):
+        try:
+            by_batch = {p["batchId"]: p for p in json.loads(_read_text(path))}
+        except (ValueError, KeyError, TypeError) as e:
+            # a previous run killed mid-write leaves truncated JSON here;
+            # telemetry is the LEAST important artifact in the run — a
+            # crash would propagate out of run_streaming BEFORE the
+            # result tables are written, discarding the whole stream's
+            # output over a merge of old progress rows. Start fresh.
+            warnings.warn(
+                f"corrupt {path!r} ({e}); overwriting with this run's "
+                f"progress only",
+                RuntimeWarning,
+            )
+    for p in query.recentProgress:
+        d = json.loads(p.json)
+        by_batch[d["batchId"]] = d
+    _write_text(
+        path, json.dumps([by_batch[k] for k in sorted(by_batch)], indent=2)
+    )
+    return path

@@ -53,6 +53,45 @@ def test_cli_batch_end_to_end(spark, tmp_path, capsys):
     )
 
 
+def test_cli_streaming_end_to_end(spark, tmp_path, capsys):
+    """--mode incremental streams a two-file pages directory through
+    IncrementalDedup, writes the same three result tables as batch mode
+    and the query's progress telemetry under the work dir."""
+    n_pages = 300
+    scfg = SynthConfig(n_docs=n_pages, seed=71)
+    pages = generate_pages(spark, scfg)
+    src = str(tmp_path / "pages")
+    # two files, split by id parity so dup clusters span both
+    pages.where(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(src)
+    pages.where(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    main(
+        [
+            "--input", src,
+            "--output", out,
+            "--mode", "incremental",
+            "--num-bands", "16",
+            "--rows-per-band", "2",
+            "--jaccard-threshold", "0.55",
+            "--max-bucket-size", "50",
+            "--checkpoint-dir", ckpt,
+        ]
+    )
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["mode"] == "incremental"
+    for table in ("verified", "clusters", "survivors"):
+        assert os.path.isdir(f"{out}/{table}"), table
+    ver = spark.read.parquet(f"{out}/verified")
+    assert ver.count() > 0
+    assert ver.agg(F.min("jaccard")).first()[0] >= 0.55
+    with open(f"{ckpt}/metrics/query_progress.json") as f:
+        progress = json.load(f)
+    assert sum(p["numInputRows"] for p in progress) == n_pages
+
+
 def test_cli_plan_only_writes_nothing(spark, tmp_path, capsys):
     scfg = SynthConfig(n_docs=100, seed=59)
     src = str(tmp_path / "pages")
@@ -401,7 +440,7 @@ def test_cli_streaming_rejects_plan_only(tmp_path):
             [
                 "--input", str(tmp_path / "src"),
                 "--output", str(tmp_path / "out"),
-                "--mode", "stateful",
+                "--mode", "incremental",
                 "--checkpoint-dir", str(tmp_path / "ckpt"),
                 "--plan-only",
             ]

@@ -1,178 +1,47 @@
-"""Stateful streaming dedup (applyInPandasWithState): per-bucket state in
-the state store, exact parity with the batch candidate-pair dataflow, and
-state recovery across query restarts."""
+"""State carried across streaming restarts: a stream resumed from its
+checkpoint and persisted bucket index must refuse a changed kernel/config
+instead of probing new band keys against old state."""
 
-import os
-
-from pyspark.sql import functions as F
+import pytest
+from pyspark.errors import StreamingQueryException
 
 from lsh_qd_spark.config import DedupConfig
-from lsh_qd_spark.operators.pairs import candidate_pairs
-from lsh_qd_spark.plans.pipeline import DedupPipeline
-from lsh_qd_spark.streaming.stateful import StatefulDedup
-from lsh_qd_spark.synth import SynthConfig, generate_pages
+from lsh_qd_spark.streaming import IncrementalDedup
 
 
-CFG = DedupConfig(rows_per_band=2, num_bands=16, alpha=2, max_bucket_size=500)
-
-
-def test_stateful_matches_batch_and_recovers_state(spark, tmp_path):
-    work = str(tmp_path / "work")
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-
-    cfg = SynthConfig(n_docs=200, seed=31)
-    pages = generate_pages(spark, cfg).cache()
-    dstart = cfg.dup_start
-
-    # split so every dup cluster has members in BOTH files: cross-batch
-    # pairs require state to survive between micro-batches (and, because we
-    # restart the query per file, across checkpoint recovery too)
-    first = pages.where(
-        (F.col("doc_id") < dstart) | ((F.col("doc_id") - dstart) % 3 != 2)
-    )
-    second = pages.where(
-        (F.col("doc_id") >= dstart) & ((F.col("doc_id") - dstart) % 3 == 2)
-    )
-    sd = StatefulDedup(CFG, work)
-
-    first.coalesce(1).write.parquet(src + "/f1")
-    sd.start(spark, src + "/*", max_files_per_trigger=1).awaitTermination(120)
-    n_first = spark.read.parquet(sd.collisions_dir).count()
-
-    second.coalesce(1).write.parquet(src + "/f2")
-    # restart on the same checkpoint: bucket state must be RESTORED from the
-    # state store — cross-file pairs only exist if it is
-    sd.start(spark, src + "/*", max_files_per_trigger=1).awaitTermination(120)
-
-    got = {
-        (r["id_a"], r["id_b"], r["n_bands"])
-        for r in sd.pairs(spark).where(~F.col("via_star")).collect()
-    }
-    # exact parity with the batch dataflow on the same corpus/config
-    # (no mega-buckets at this cap, so star paths don't diverge)
-    pipe = DedupPipeline(CFG)
-    batch = candidate_pairs(
-        pipe.buckets(pipe.signatures_from_text(pages)),
-        alpha=CFG.alpha,
-        max_bucket_size=CFG.max_bucket_size,
-    )
-    want = {
-        (r["id_a"], r["id_b"], r["n_bands"])
-        for r in batch.where(~F.col("via_star")).collect()
-    }
-    assert got == want
-    # and the second run genuinely added cross-file collisions
-    assert spark.read.parquet(sd.collisions_dir).count() > n_first
-
-
-def test_stateful_mega_bucket_stays_capped(spark, tmp_path):
-    """Past the cap a bucket emits STAR edges against its representative —
-    O(n) output/state, and the component stays connected."""
-    work = str(tmp_path / "work")
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    # 40 identical docs → every band-bucket holds all 40
-    rows = [(i, f"u{i}", None, None, "same boilerplate text here", "en")
-            for i in range(40)]
-    pages = spark.createDataFrame(
-        rows, "doc_id long, url string, warc_ts timestamp, html binary, "
-              "text string, lang string"
-    )
-    pages.coalesce(1).write.parquet(src + "/f1")
-    cfg = DedupConfig(rows_per_band=2, num_bands=8, alpha=1, max_bucket_size=10)
-    sd = StatefulDedup(cfg, work)
-    sd.start(spark, src + "/*").awaitTermination(120)
-
-    pairs = sd.pairs(spark).collect()
-    ids = {r["id_a"] for r in pairs} | {r["id_b"] for r in pairs}
-    assert ids == set(range(40))  # one connected component
-    col = spark.read.parquet(sd.collisions_dir)
-    per_band = (
-        col.groupBy("band_idx").count().agg(F.max("count")).collect()[0][0]
-    )
-    # capped: ≤ C(10,2) exact + 30 star per band, NOT C(40,2)=780
-    assert per_band <= 45 + 30
-
-
-def test_pairs_before_any_batch_is_empty(spark, tmp_path):
-    """pairs()/verified/clusters before the first committed micro-batch
-    (sink dir never created) must return the empty candidate-pair shape,
-    not raise PATH_NOT_FOUND — the facade's mode-agnostic contract."""
-    sd = StatefulDedup(
-        DedupConfig(rows_per_band=2, num_bands=8), str(tmp_path / "w")
-    )
-    out = sd.pairs(spark)
-    assert out.count() == 0
-    assert set(out.columns) == {"id_a", "id_b", "n_bands", "via_star"}
+def _write_pages(spark, path, doc_id):
+    spark.createDataFrame(
+        [(doc_id, "some page text here for the stream")],
+        "doc_id long, text string",
+    ).selectExpr(
+        "doc_id",
+        "cast(null as string) url",
+        "cast(null as timestamp) warc_ts",
+        "cast(null as binary) html",
+        "text",
+        "cast(null as string) lang",
+    ).coalesce(1).write.parquet(path)
 
 
 def test_stateful_kernel_change_fails_loudly(spark, tmp_path):
-    """Resuming a checkpointed stateful stream under a different
-    kernel/config must raise, not silently probe new band keys against
-    old state (zero duplicates vs every pre-upgrade doc) — the same
-    guard the incremental index has."""
-    import pytest
-
+    """Resuming a checkpointed stream under a different kernel/config must
+    fail the query, not silently probe new band keys against the old index
+    (zero duplicates vs every pre-upgrade doc)."""
     work = str(tmp_path / "work")
     src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(0, "some page text here for the stream")],
-        "doc_id long, text string",
-    ).selectExpr(
-        "doc_id",
-        "cast(null as string) url",
-        "cast(null as timestamp) warc_ts",
-        "cast(null as binary) html",
-        "text",
-        "cast(null as string) lang",
-    ).coalesce(1).write.parquet(src)
+    _write_pages(spark, src + "/f1", 0)
 
     cfg = DedupConfig(rows_per_band=2, num_bands=8, alpha=1)
-    sd = StatefulDedup(cfg, work)
-    sd.start(spark, src).awaitTermination(120)
+    IncrementalDedup(cfg, work).start(spark, src + "/*").awaitTermination(120)
 
-    # same config resumes fine
-    StatefulDedup(cfg, work).start(spark, src).awaitTermination(120)
+    # same config resumes fine over a new file
+    _write_pages(spark, src + "/f2", 1)
+    IncrementalDedup(cfg, work).start(spark, src + "/*").awaitTermination(120)
 
-    # different banding = different band-key generation -> loud failure
+    # different banding = different band-key generation -> loud failure on
+    # the first resumed micro-batch
+    _write_pages(spark, src + "/f3", 2)
     other = DedupConfig(rows_per_band=4, num_bands=4, alpha=1)
-    with pytest.raises(RuntimeError, match="kernel|config|compat"):
-        StatefulDedup(other, work).start(spark, src)
-
-
-def test_stateful_premarker_checkpoint_migrates_via_stamp(spark, tmp_path):
-    """A checkpoint written before compat markers existed (state present,
-    no marker) refuses to resume — we cannot distinguish "same kernel,
-    pre-marker release" from "different kernel", and auto-stamping would
-    launder the latter. stamp_compat() is the documented one-time
-    migration for the operator who KNOWS kernel+config are unchanged."""
-    import pytest
-
-    work = str(tmp_path / "work")
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(0, "some page text here for the stream")],
-        "doc_id long, text string",
-    ).selectExpr(
-        "doc_id",
-        "cast(null as string) url",
-        "cast(null as timestamp) warc_ts",
-        "cast(null as binary) html",
-        "text",
-        "cast(null as string) lang",
-    ).coalesce(1).write.parquet(src)
-
-    cfg = DedupConfig(rows_per_band=2, num_bands=8, alpha=1)
-    sd = StatefulDedup(cfg, work)
-    sd.start(spark, src).awaitTermination(120)
-
-    # simulate a pre-marker-release checkpoint: state exists, no marker
-    os.remove(os.path.join(work, "_compat_meta.json"))
-    with pytest.raises(RuntimeError, match="stamp_compat"):
-        StatefulDedup(cfg, work).start(spark, src)
-
-    # operator-attested migration: stamp, then resume normally
-    sd2 = StatefulDedup(cfg, work)
-    sd2.stamp_compat()
-    sd2.start(spark, src).awaitTermination(120)
+    q = IncrementalDedup(other, work).start(spark, src + "/*")
+    with pytest.raises(StreamingQueryException, match="config/kernel hash"):
+        q.awaitTermination(120)

@@ -1,16 +1,16 @@
-"""stream_dedup facade: mode parity on the same planted stream, and the
-full batch tail (alpha count → Jaccard verify → connected components)
-over a streaming collision sink (VERDICT.md round 2, Next round #5)."""
+"""IncrementalDedup's batch tail: stream/batch parity on the same planted
+stream, and the full tail (alpha count → Jaccard verify → connected
+components) over the streaming hits sink (VERDICT.md round 2, Next
+round #5)."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from lsh_qd_spark.config import DedupConfig
 from lsh_qd_spark.operators.pairs import candidate_pairs
 from lsh_qd_spark.plans.pipeline import DedupPipeline
-from lsh_qd_spark.streaming import stream_dedup
+from lsh_qd_spark.streaming import IncrementalDedup, save_progress
 from lsh_qd_spark.synth import SynthConfig, generate_pages, truth_pairs
 
 CFG = DedupConfig(rows_per_band=2, num_bands=16, alpha=2, max_bucket_size=500)
@@ -18,7 +18,7 @@ CFG = DedupConfig(rows_per_band=2, num_bands=16, alpha=2, max_bucket_size=500)
 
 def _write_stream_files(spark, cfg, src):
     """Planted corpus split so every dup cluster spans both files —
-    cross-batch pairs exercise each mode's state carry."""
+    cross-batch pairs exercise the accumulated bucket index."""
     pages = generate_pages(spark, cfg).cache()
     dstart = cfg.dup_start
     first = pages.where(
@@ -34,24 +34,18 @@ def _write_stream_files(spark, cfg, src):
 
 
 def test_mode_parity_on_same_stream(spark, tmp_path):
-    """Both modes, same planted stream, same config → identical non-star
-    candidate-pair sets (and both equal the batch dataflow)."""
+    """Same planted corpus, same config: the stream's non-star candidate
+    pairs equal the batch dataflow's."""
     cfg = SynthConfig(n_docs=200, seed=37)
     src = str(tmp_path / "src")
     pages = _write_stream_files(spark, cfg, src)
 
-    results = {}
-    for mode in ("incremental", "stateful"):
-        sd = stream_dedup(CFG, str(tmp_path / mode), mode=mode)
-        sd.start(spark, src + "/*", max_files_per_trigger=1).awaitTermination(
-            240
-        )
-        results[mode] = {
-            (r["id_a"], r["id_b"])
-            for r in sd.pairs(spark).where(~F.col("via_star")).collect()
-        }
-
-    assert results["incremental"] == results["stateful"]
+    inc = IncrementalDedup(CFG, str(tmp_path / "work"))
+    inc.start(spark, src + "/*", max_files_per_trigger=1).awaitTermination(240)
+    stream = {
+        (r["id_a"], r["id_b"])
+        for r in inc.pairs(spark).where(~F.col("via_star")).collect()
+    }
 
     pipe = DedupPipeline(CFG)
     batch = {
@@ -64,21 +58,20 @@ def test_mode_parity_on_same_stream(spark, tmp_path):
         .where(~F.col("via_star"))
         .collect()
     }
-    assert results["stateful"] == batch
+    assert stream == batch
 
 
-@pytest.mark.parametrize("mode", ["incremental", "stateful"])
-def test_full_tail_over_sink(spark, tmp_path, mode):
+def test_full_tail_over_sink(spark, tmp_path):
     """alpha count → Jaccard verify → connected components over the
-    streaming sink recovers the planted clusters (either mode)."""
+    streaming sink recovers the planted clusters."""
     cfg = SynthConfig(n_docs=300, seed=41)
     src = str(tmp_path / "src")
     pages = _write_stream_files(spark, cfg, src)
 
-    sd = stream_dedup(CFG, str(tmp_path / "work"), mode=mode)
-    sd.start(spark, src + "/*", max_files_per_trigger=1).awaitTermination(240)
+    inc = IncrementalDedup(CFG, str(tmp_path / "work"))
+    inc.start(spark, src + "/*", max_files_per_trigger=1).awaitTermination(240)
 
-    ver = sd.verified_pairs(spark, pages).cache()
+    ver = inc.verified_pairs(spark, pages).cache()
     # verified pairs carry jaccard ≥ threshold and canonical order
     for r in ver.limit(50).collect():
         assert r["id_a"] < r["id_b"]
@@ -96,7 +89,7 @@ def test_full_tail_over_sink(spark, tmp_path, mode):
     recall = len(got_pairs & want) / len(want)
     assert recall >= 0.95, f"tier>=0.9 recall {recall}"
 
-    clusters = sd.clusters(spark, pages)
+    clusters = inc.clusters(spark, pages)
     # every clustered doc pair in the same cluster_id is a real dup
     # cluster member (clusters only form over verified edges)
     assert clusters.count() > 0
@@ -115,12 +108,13 @@ def test_full_tail_over_sink(spark, tmp_path, mode):
     assert n_true / n_same >= 0.95, f"cluster precision {n_true}/{n_same}"
 
 
-def test_stateful_tail_at_100k_docs(spark, tmp_path):
+def test_stream_tail_at_100k_docs(spark, tmp_path):
     """The judge-requested scale point (round-2 verdict #5): 100k planted
-    docs through the STATEFUL streaming path split across two micro-batches
-    (state carry), then the full batch tail — alpha count, Jaccard verify,
-    connected components — over the collision sink. Asserts recall of
-    high-tier planted pairs and cluster precision at this scale."""
+    docs through the streaming path split across two micro-batches (the
+    second probes the index the first built), then the full batch tail —
+    alpha count, Jaccard verify, connected components — over the hits
+    sink. Asserts recall of high-tier planted pairs and cluster precision
+    at this scale."""
     cfg = SynthConfig(n_docs=100_000, seed=47)
     src = str(tmp_path / "src")
     pages = _write_stream_files(spark, cfg, src)
@@ -128,8 +122,8 @@ def test_stateful_tail_at_100k_docs(spark, tmp_path):
     dcfg = DedupConfig(
         rows_per_band=2, num_bands=8, alpha=2, max_bucket_size=500
     )
-    sd = stream_dedup(dcfg, str(tmp_path / "work"), mode="stateful")
-    sd.start(spark, src + "/*", max_files_per_trigger=1).awaitTermination(600)
+    inc = IncrementalDedup(dcfg, str(tmp_path / "work"))
+    inc.start(spark, src + "/*", max_files_per_trigger=1).awaitTermination(600)
 
     truth = truth_pairs(spark, cfg).cache()
     # Pair-level recall on the NEAR-dup tiers only (tier 0.95 < 1.0): the
@@ -143,12 +137,12 @@ def test_stateful_tail_at_100k_docs(spark, tmp_path):
             (F.col("tier") >= 0.9) & (F.col("tier") < 1.0)
         ).collect()
     }
-    ver = sd.verified_pairs(spark, pages).cache()
+    ver = inc.verified_pairs(spark, pages).cache()
     got_pairs = {(r["id_a"], r["id_b"]) for r in ver.collect()}
     recall = len(got_pairs & want) / len(want)
     assert recall >= 0.95, f"tier 0.95 recall {recall} over {len(want)} pairs"
 
-    clusters = sd.clusters(spark, pages).cache()
+    clusters = inc.clusters(spark, pages).cache()
     # boiler mega-cluster: star edges must have kept all 2000 byte-identical
     # docs in ONE component despite the pair cap
     bstart = cfg.n_background + cfg.n_edge
@@ -197,13 +191,11 @@ def test_stateful_tail_at_100k_docs(spark, tmp_path):
 
 
 def test_save_progress_writes_query_telemetry(spark, tmp_path):
-    from lsh_qd_spark.streaming.facade import save_progress
-
     cfg = SynthConfig(n_docs=150, seed=67)
     src = str(tmp_path / "src")
     _write_stream_files(spark, cfg, src)
-    sd = stream_dedup(CFG, str(tmp_path / "work"), mode="stateful")
-    q = sd.start(spark, src + "/*", max_files_per_trigger=1)
+    inc = IncrementalDedup(CFG, str(tmp_path / "work"))
+    q = inc.start(spark, src + "/*", max_files_per_trigger=1)
     q.awaitTermination(240)
     path = save_progress(q, str(tmp_path / "work"))
     import json
@@ -212,20 +204,12 @@ def test_save_progress_writes_query_telemetry(spark, tmp_path):
         progress = json.load(f)
     assert len(progress) >= 2  # two files → two micro-batches
     assert sum(p["numInputRows"] for p in progress) == 150
-    # the state operator reports its stored keys (bucket state)
-    assert any(
-        op.get("numRowsTotal", 0) > 0
-        for p in progress
-        for op in p.get("stateOperators", [])
-    )
 
 
 def test_save_progress_merges_ring_buffer(tmp_path):
     """recentProgress is a capped ring buffer; repeated save_progress calls
     must accumulate batches keyed by batchId, not truncate to the tail."""
     import json
-
-    from lsh_qd_spark.streaming.facade import save_progress
 
     class _P:
         def __init__(self, batch_id, rows):
@@ -243,3 +227,14 @@ def test_save_progress_merges_ring_buffer(tmp_path):
         got = json.load(f)
     assert [p["batchId"] for p in got] == [0, 1, 2]
     assert sum(p["numInputRows"] for p in got) == 60
+
+
+def test_pairs_before_any_batch_is_empty(spark, tmp_path):
+    """pairs() before the first committed micro-batch (sink dir never
+    created) returns the empty candidate-pair shape, not PATH_NOT_FOUND."""
+    inc = IncrementalDedup(
+        DedupConfig(rows_per_band=2, num_bands=8), str(tmp_path / "w")
+    )
+    out = inc.pairs(spark)
+    assert out.count() == 0
+    assert set(out.columns) == {"id_a", "id_b", "n_bands", "via_star"}

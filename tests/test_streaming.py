@@ -199,14 +199,18 @@ def test_recrawled_doc_does_not_double_count_bands(spark, tmp_path):
 
 def test_shard_layout_mismatch_fails_loudly(spark, tmp_path):
     """Resuming a stream over an index persisted with a different n_shards
-    would silently join against the wrong partitions (zero recall);
-    process_batch must raise instead."""
+    would silently join against the wrong partitions, and one persisted by
+    a different kernel/config would probe new band keys against old ones
+    (zero recall either way); process_batch must raise instead."""
     work = str(tmp_path / "work")
     cfg = DedupConfig(rows_per_band=2, num_bands=8, alpha=1)
     b = spark.createDataFrame([(0, "some page text here")], "doc_id long, text string")
     IncrementalDedup(cfg, work, n_shards=64).process_batch(b, 0)
     with pytest.raises(RuntimeError, match="n_shards"):
         IncrementalDedup(cfg, work, n_shards=128).process_batch(b, 1)
+    other = DedupConfig(rows_per_band=4, num_bands=4)
+    with pytest.raises(RuntimeError, match="config/kernel hash"):
+        IncrementalDedup(other, work, n_shards=64).process_batch(b, 1)
 
 
 def test_mega_bucket_emits_stars_not_quadratic(spark, tmp_path):
@@ -214,7 +218,6 @@ def test_mega_bucket_emits_stars_not_quadratic(spark, tmp_path):
     must emit O(n) star edges (rep preferred from the INDEXED side so the
     component stays connected across epochs), never O(n²) pairs."""
     from lsh_qd_spark.operators.cluster import connected_components
-    from lsh_qd_spark.streaming.facade import stream_dedup
 
     work = str(tmp_path / "work")
     n = 400
@@ -223,19 +226,19 @@ def test_mega_bucket_emits_stars_not_quadratic(spark, tmp_path):
          for i in range(n)],
         "doc_id long, text string",
     )
-    sd = stream_dedup(
+    inc = IncrementalDedup(
         DedupConfig(rows_per_band=2, num_bands=8, alpha=1, max_bucket_size=50),
         work,
     )
-    sd._impl.process_batch(docs.where(F.col("doc_id") < 200), epoch_id=0)
-    sd._impl.process_batch(docs.where(F.col("doc_id") >= 200), epoch_id=1)
-    hits = sd._impl.hits(spark)
+    inc.process_batch(docs.where(F.col("doc_id") < 200), epoch_id=0)
+    inc.process_batch(docs.where(F.col("doc_id") >= 200), epoch_id=1)
+    hits = inc.hits(spark)
     total = hits.count()
     # full pairs would be C(400,2) = 79,800; stars are one edge per new doc
     assert total < 3 * n, f"quadratic explosion: {total} hit rows"
     assert hits.where(F.col("via_star")).count() > 0
     # the star edges keep the WHOLE cluster connected across both epochs
-    pairs = sd.pairs(spark)
+    pairs = inc.pairs(spark)
     labels = connected_components(
         pairs.select("id_a", "id_b"), driver_edge_threshold=0
     )
@@ -267,9 +270,9 @@ def test_start_forwards_reader_options(spark, tmp_path):
 def test_mixed_via_star_schema_keeps_legacy_hits(spark, tmp_path):
     """A hits sink with pre-via_star epochs continued by current code must
     surface the legacy rows with via_star=False — without mergeSchema +
-    coalesce, legacy rows decode via_star as NULL and the facade's
-    where(~via_star)/where(via_star) split drops every pre-upgrade
-    duplicate with no error."""
+    coalesce, legacy rows decode via_star as NULL and the
+    where(~via_star)/where(via_star) split in pairs() drops every
+    pre-upgrade duplicate with no error."""
     work = str(tmp_path / "work")
     inc = IncrementalDedup(
         DedupConfig(rows_per_band=2, num_bands=8, alpha=1), work
@@ -292,13 +295,8 @@ def test_mixed_via_star_schema_keeps_legacy_hits(spark, tmp_path):
     assert set(rows) == {10, 20}
     assert rows[10]["via_star"] is False  # legacy row: coalesced, not NULL
     assert rows[20]["via_star"] is True
-    # the facade's split must see BOTH rows (NULL would vanish from both)
-    from lsh_qd_spark.streaming.facade import stream_dedup
-
-    sd = stream_dedup(
-        DedupConfig(rows_per_band=2, num_bands=8, alpha=1), work
-    )
-    pairs = {(r["id_a"], r["id_b"]): r for r in sd.pairs(spark).collect()}
+    # the split in pairs() must see BOTH rows (NULL would vanish from both)
+    pairs = {(r["id_a"], r["id_b"]): r for r in inc.pairs(spark).collect()}
     assert (3, 10) in pairs and pairs[(3, 10)]["n_bands"] == 5
     assert (4, 20) in pairs and pairs[(4, 20)]["via_star"] is True
 
@@ -314,7 +312,7 @@ def test_compat_marker_written_before_data(spark, tmp_path):
 
     work = str(tmp_path / "work")
     cfg = DedupConfig(rows_per_band=2, num_bands=8, alpha=1)
-    inc = IncrementalDedup(cfg, work, record_metrics=False)
+    inc = IncrementalDedup(cfg, work)
     b = spark.createDataFrame(
         [(0, "some page text here")], "doc_id long, text string"
     )
