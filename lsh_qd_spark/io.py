@@ -272,6 +272,6 @@ def check_compat_meta(
         raise RuntimeError(
             f"persisted {what} at {ref!r} is incompatible with this reader "
             f"({'; '.join(mismatches)}); its keys/partitions would match "
-            f"the wrong rows — rebuild it (LSHIndex.hash / delete the work "
-            f"dir) or construct the reader with the builder's settings"
+            f"the wrong rows — rebuild it (delete it, or the work dir that "
+            f"holds it) or construct the reader with the builder's settings"
         )

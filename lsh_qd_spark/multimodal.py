@@ -28,11 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, mime string, "
-    "width int, height int, duration_ms long"
-)
-
 FEATURE_SCHEMA = "media_id long, feature array<float>, feat_dim int"
 
 

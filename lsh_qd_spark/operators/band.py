@@ -16,14 +16,14 @@ from pyspark.sql import functions as F
 
 
 def shard_expr(n_shards: int) -> Column:
-    """``pmod(xxhash64(band_key), n_shards)`` — THE shard derivation for
-    every persisted index layout. One definition on purpose: the batch
-    index (index.LSHIndex) and the streaming index
-    (streaming/incremental.IncrementalDedup) interoperate by sharing this
-    exact expression, and a drifted copy would silently mis-prune one
-    side's shard filter against the other's partitions (partial recall,
-    no error — the n_shards layout marker cannot catch it because both
-    sides would still record the same count)."""
+    """``pmod(xxhash64(band_key), n_shards)`` — the shard derivation of the
+    persisted streaming bucket index
+    (streaming/incremental.IncrementalDedup). Every epoch's writer and
+    every later batch's shard-pruned probe must share this exact
+    expression: a drifted copy would silently mis-prune the probe against
+    the written partitions (partial recall, no error — the n_shards layout
+    marker cannot catch it because both sides would still record the same
+    count)."""
     return F.pmod(F.xxhash64("band_key"), F.lit(n_shards)).cast("int")
 
 

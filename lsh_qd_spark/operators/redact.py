@@ -112,12 +112,6 @@ def pii_scrub(text: Column) -> tuple[list[Column], Column]:
     return counts, cur
 
 
-def pii_counts(text: Column) -> list[Column]:
-    """One count column per rule (see ``pii_scrub``); prefer ``pii_scrub``
-    when the redacted text is also needed."""
-    return pii_scrub(text)[0]
-
-
 def redact_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """The scrubbed corpus plus per-rule ``n_<rule>`` audit counts — all
     input columns other than ``text_col`` pass through untouched (no id

@@ -820,16 +820,6 @@ FROM scored
 SQL_LANGID = _sql_langid()
 
 
-def _cosine_expr(a, b):
-    """THE sequential-fold cosine — operators/ann.cosine_expr, one
-    definition: the ANSI try_divide fix had to land in two hand-kept
-    copies once; the oracle baseline and the production operator must
-    not be fixable independently."""
-    from lsh_qd_spark.operators.ann import cosine_expr
-
-    return cosine_expr(a, b)
-
-
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (the ANN baseline) — THE production
     operator (operators/ann.brute_force_topk), not a line-for-line copy

@@ -37,8 +37,7 @@ from lsh_qd_spark.operators.cluster import connected_components
 from lsh_qd_spark.operators.pairs import candidate_pairs
 from lsh_qd_spark.operators.verify import verify_pairs, verify_pairs_text
 
-STAGES = ["shingles", "signatures", "buckets", "pairs", "verified", "clusters"]
-_MULTI_CONSUMER_STAGES = {"shingles", "buckets", "pairs", "verified"}
+_MULTI_CONSUMER_STAGES = {"buckets", "pairs", "verified"}
 
 log = logging.getLogger(__name__)
 
@@ -431,7 +430,17 @@ class DedupPipeline:
         flags — the CLI passes its prep hash): resuming the same
         checkpoint_dir against a DIFFERENT input or prep then rebuilds
         instead of silently returning the old corpus's stages.
+
+        Only the fused ``shingle_hash="fast"`` kernel runs here; other
+        shingle hashes build their stages with ``shingle()``,
+        ``signatures()``, ``buckets()``, ``pairs()`` and ``verified()``.
         """
+        if self.config.shingle_hash != "fast":
+            raise ValueError(
+                f"DedupPipeline.run needs shingle_hash='fast', got "
+                f"{self.config.shingle_hash!r}; build the stages with "
+                f"shingle(), signatures(), buckets(), pairs() and verified()"
+            )
         spark = docs.sparkSession
         # degenerate-input rescue: a one-row-group corpus must not serialize
         # the signature kernel and the verify text fetch onto one core
@@ -471,54 +480,45 @@ class DedupPipeline:
                 self.metrics[name] = metrics
             elif name in _MULTI_CONSUMER_STAGES:
                 # Stages with ≥2 downstream consumers (buckets → sizes agg +
-                # pair groupBy + star join; pairs → verify + candidate ids;
-                # shingles → both verify sides). Without materialization
-                # Spark re-derives the whole upstream chain per consumer —
-                # persist() is the in-memory analog of the checkpointed
-                # stage tables used at scale. Single-consumer stages
-                # (signatures) stay unpersisted so the narrow
-                # scan→UDF→explode chain pipelines into one stage.
+                # pair groupBy + star join; pairs → verify + candidate ids).
+                # Without materialization Spark re-derives the whole
+                # upstream chain per consumer — persist() is the in-memory
+                # analog of the checkpointed stage tables used at scale.
+                # Single-consumer stages (signatures) stay unpersisted so
+                # the narrow scan→UDF→explode chain pipelines into one
+                # stage.
                 df = df.persist()
                 self._persisted.append(df)
             return df
 
-        if self.config.shingle_hash == "fast":
-            # Fused path: signatures straight from text; verification joins
-            # pairs back to TEXT and shingles inside the verify kernel — no
-            # corpus- or candidate-wide shingle column is materialized
-            # (profiling: caching ~1GB of shingle arrays does not scale).
-            sigs = stage(
-                "signatures",
-                lambda: self.signatures_from_text(docs, text_col, id_col),
-            )
-            bucketed = stage("buckets", lambda: buckets_stage(sigs))
-            cand = stage("pairs", lambda: self.pairs(bucketed))
-            ver = stage(
-                "verified",
-                lambda: verify_pairs_text(
-                    cand,
-                    docs,
-                    self.config.jaccard_threshold,
-                    self.config.shingle_k,
-                    id_col=id_col,
-                    text_col=text_col,
-                    fetch=self.config.verify_fetch,
-                    broadcast_ids_cap=self.config.verify_broadcast_ids_cap,
-                ),
-            )
-            # genuinely lazy (no count/checkpoint inside — see
-            # candidate_shingles): constructing it here costs no jobs; it
-            # derives from the persisted pairs stage for callers that
-            # consume the sets
-            shingled = self.candidate_shingles(docs, cand, text_col, id_col)
-        else:
-            shingled = stage(
-                "shingles", lambda: self.shingle(docs, text_col, id_col)
-            )
-            sigs = stage("signatures", lambda: self.signatures(shingled))
-            bucketed = stage("buckets", lambda: buckets_stage(sigs))
-            cand = stage("pairs", lambda: self.pairs(bucketed))
-            ver = stage("verified", lambda: self.verified(cand, shingled))
+        # Fused path: signatures straight from text; verification joins
+        # pairs back to TEXT and shingles inside the verify kernel — no
+        # corpus- or candidate-wide shingle column is materialized
+        # (profiling: caching ~1GB of shingle arrays does not scale).
+        sigs = stage(
+            "signatures",
+            lambda: self.signatures_from_text(docs, text_col, id_col),
+        )
+        bucketed = stage("buckets", lambda: buckets_stage(sigs))
+        cand = stage("pairs", lambda: self.pairs(bucketed))
+        ver = stage(
+            "verified",
+            lambda: verify_pairs_text(
+                cand,
+                docs,
+                self.config.jaccard_threshold,
+                self.config.shingle_k,
+                id_col=id_col,
+                text_col=text_col,
+                fetch=self.config.verify_fetch,
+                broadcast_ids_cap=self.config.verify_broadcast_ids_cap,
+            ),
+        )
+        # genuinely lazy (no count/checkpoint inside — see
+        # candidate_shingles): constructing it here costs no jobs; it
+        # derives from the persisted pairs stage for callers that
+        # consume the sets
+        shingled = self.candidate_shingles(docs, cand, text_col, id_col)
         # Singleton vertices = every doc with a non-null sig (reference
         # empty-set skip). Derived from the BUCKETS stage — persisted or
         # checkpointed above — not from sigs: a `sig IS NOT NULL` filter on

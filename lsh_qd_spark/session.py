@@ -80,8 +80,8 @@ def get_spark(
             str(runtime.arrow_max_records_per_batch),
         )
         .config("spark.ui.enabled", "false")
-        # managed tables (bucketed index, LSHIndex.hash_bucketed) must not
-        # land inside the repo checkout
+        # managed tables (catalog-mode CLI result tables) must not land
+        # inside the repo checkout
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

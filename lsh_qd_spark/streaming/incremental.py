@@ -300,8 +300,14 @@ class IncrementalDedup:
         # epoch-partitioned dynamic overwrite on BOTH sinks → a replayed
         # epoch rewrites its own partitions, never double-appends.
         write_stage(hits, self.hits_dir, "dynamic_overwrite", ["epoch"])
+        # shuffle on shard first so each (epoch, shard) directory gets ONE
+        # file: written as read, every task writes one small file per shard
+        # it touches, and every later batch lists and opens them all
         write_stage(
-            buckets, self.index_dir, "dynamic_overwrite", ["epoch", "shard"]
+            buckets.repartition("shard"),
+            self.index_dir,
+            "dynamic_overwrite",
+            ["epoch", "shard"],
         )
         # Per-epoch lineage + metrics (north rule): per-shard bucket-row
         # counts (the index partitions this epoch wrote) + hit count.

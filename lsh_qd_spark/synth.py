@@ -184,121 +184,6 @@ def truth_clusters(spark: SparkSession, cfg: SynthConfig) -> DataFrame:
     ).where(F.col("cluster_id").isNotNull())
 
 
-def generate_binary_rows(
-    spark: SparkSession,
-    n_rows: int,
-    n_dims: int,
-    density: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """(doc_id, shingles): nonzero indices of Bernoulli(density) binary
-    vectors — gen_uni_rand_data_bin (/root/reference/lsh-qd.py:623-634) in
-    the set representation MinHash derives at lsh-qd.py:195. Deterministic
-    per (seed, doc_id)."""
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            rows = []
-            for i in ids:
-                rng = np.random.default_rng((seed, 20, int(i)))
-                nz = np.nonzero(rng.random(n_dims) < density)[0]
-                rows.append(nz.tolist())
-            yield pd.DataFrame(
-                {"doc_id": ids.astype(np.int64), "shingles": rows}
-            )
-
-    return spark.range(n_rows).mapInPandas(
-        gen, schema="doc_id long, shingles array<long>"
-    )
-
-
-def generate_uniform_real(
-    spark: SparkSession, n_rows: int, n_dims: int, seed: int = 42
-) -> DataFrame:
-    """(vec_id, embedding): uniform directions scaled into the unit ball
-    with the reference's ad-hoc 0.72 radius factor — gen_uni_rand_data_real
-    (/root/reference/lsh-qd.py:637-658, scale at :652-653), reproduced for
-    parity on its test configs."""
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            rows = []
-            for i in ids:
-                rng = np.random.default_rng((seed, 21, int(i)))
-                v = rng.standard_normal(n_dims)
-                v = v / np.linalg.norm(v) * 0.72 * rng.random() ** (1.0 / n_dims)
-                rows.append(v.astype(np.float32).tolist())
-            yield pd.DataFrame(
-                {"vec_id": ids.astype(np.int64), "embedding": rows}
-            )
-
-    return spark.range(n_rows).mapInPandas(
-        gen, schema="vec_id long, embedding array<float>"
-    )
-
-
-@dataclass(frozen=True)
-class SynthEmbeddingConfig:
-    """Planted-neighbor vector dataset — the analog of ``SyntheticDataset``
-    (/root/reference/datasets.py:87-133): ``neighbors_per_query`` points
-    placed within ``max_neighbor_dist`` of each of the first
-    ``n_queries`` base points; the rest uniform on the unit sphere."""
-
-    n_vectors: int = 2000
-    n_dims: int = 64
-    n_queries: int = 50
-    neighbors_per_query: int = 3
-    max_neighbor_dist: float = 0.05
-    seed: int = 42
-
-
-def generate_embeddings(spark: SparkSession, cfg: SynthEmbeddingConfig) -> DataFrame:
-    """(vec_id, embedding, label): label = the query id a planted neighbor
-    belongs to, -1 for background. Deterministic per (seed, vec_id);
-    distributed via mapInPandas. Layout: ids [0, n_queries) = query points;
-    [n_queries, n_queries + q*npq) = planted neighbors (neighbor j of query
-    q has id n_queries + q*npq + j); rest background."""
-
-    def one(vec_id: int) -> tuple[np.ndarray, int]:
-        nq, npq = cfg.n_queries, cfg.neighbors_per_query
-        planted_end = nq + nq * npq
-        if vec_id < nq:
-            rng = np.random.default_rng((cfg.seed, 10, vec_id))
-            v = rng.standard_normal(cfg.n_dims)
-            return v / np.linalg.norm(v), vec_id
-        if vec_id < planted_end:
-            q, j = divmod(vec_id - nq, npq)
-            qrng = np.random.default_rng((cfg.seed, 10, q))
-            base = qrng.standard_normal(cfg.n_dims)
-            base /= np.linalg.norm(base)
-            nrng = np.random.default_rng((cfg.seed, 11, q, j))
-            off = nrng.standard_normal(cfg.n_dims)
-            off = off / np.linalg.norm(off) * cfg.max_neighbor_dist * nrng.uniform(0.2, 1.0)
-            v = base + off
-            return v / np.linalg.norm(v), q
-        rng = np.random.default_rng((cfg.seed, 12, vec_id))
-        v = rng.standard_normal(cfg.n_dims)
-        return v / np.linalg.norm(v), -1
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            vecs, labels = [], []
-            for i in ids:
-                v, lab = one(int(i))
-                vecs.append(v.astype(np.float32).tolist())
-                labels.append(lab)
-            yield pd.DataFrame(
-                {"vec_id": ids.astype(np.int64), "embedding": vecs, "label": labels}
-            )
-
-    return spark.range(cfg.n_vectors).mapInPandas(
-        gen, schema="vec_id long, embedding array<float>, label int"
-    )
-
-
 def truth_pairs(spark: SparkSession, cfg: SynthConfig) -> DataFrame:
     """(id_a, id_b, tier) all intra-cluster pairs, id_a < id_b."""
     tc = truth_clusters(spark, cfg)

@@ -1,18 +1,24 @@
-"""LSHIndex: build-once / query-many facade over a persisted, shard-
-partitioned bucket table (the reference's LSHContainer lifecycle)."""
+"""The persisted LSH bucket index: IncrementalDedup's (epoch, shard)
+partitioned table — built by the first batch, appended to by every later
+one, guarded by a compat marker, and queryable with query_neighbors."""
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from lsh_qd_spark.config import DedupConfig
-from lsh_qd_spark.index import LSHIndex
-from lsh_qd_spark.operators.query import query_text_neighbors
+from lsh_qd_spark.io import read_stage
+from lsh_qd_spark.operators.band import shard_expr
+from lsh_qd_spark.operators.query import query_neighbors, query_text_neighbors
+from lsh_qd_spark.plans.pipeline import DedupPipeline
+from lsh_qd_spark.streaming.incremental import IncrementalDedup
 from lsh_qd_spark.synth import SynthConfig, generate_pages
 
 CFG = DedupConfig(rows_per_band=2, num_bands=16)
 SYNTH = SynthConfig(n_docs=400, seed=3)
+N_SHARDS = 16
 
 
 @pytest.fixture(scope="module")
@@ -22,20 +28,22 @@ def corpus(spark):
 
 @pytest.fixture(scope="module")
 def index(spark, corpus, tmp_path_factory):
-    ref = str(tmp_path_factory.mktemp("lsh_index") / "buckets")
-    idx = LSHIndex(CFG, ref, n_shards=16)
-    assert not idx.exists(spark)
-    idx.hash(corpus)
-    assert idx.exists(spark)
-    return idx
+    work = str(tmp_path_factory.mktemp("lsh_index") / "work")
+    inc = IncrementalDedup(CFG, work, n_shards=N_SHARDS)
+    inc.process_batch(corpus, epoch_id=0)
+    return inc
+
+
+def _query_buckets(docs):
+    pipe = DedupPipeline(CFG)
+    return pipe.buckets(pipe.signatures_from_text(docs))
 
 
 def test_index_is_shard_partitioned(spark, corpus, index):
-    shard_dirs = [
-        f for f in os.listdir(index.index_ref) if f.startswith("shard=")
-    ]
+    epoch_dir = os.path.join(index.index_dir, "epoch=0")
+    shard_dirs = [f for f in os.listdir(epoch_dir) if f.startswith("shard=")]
     assert len(shard_dirs) > 1  # physical partition pruning is possible
-    n_rows = index.buckets(spark).count()
+    n_rows = read_stage(spark, index.index_dir).count()
     shingleable = corpus.where(
         F.regexp_replace("text", r"\s+", "") != ""
     ).count()
@@ -43,12 +51,14 @@ def test_index_is_shard_partitioned(spark, corpus, index):
 
 
 def test_query_matches_unindexed_path(spark, corpus, index):
-    """Index probe ≡ direct query_text_neighbors on the same corpus/config
-    (same seed ⇒ same signatures ⇒ same buckets)."""
+    """Probing the persisted index ≡ direct query_text_neighbors on the
+    same corpus/config (same seed ⇒ same signatures ⇒ same buckets)."""
     queries = corpus.where(F.col("doc_id") >= SYNTH.dup_start).limit(5)
     via_index = {
         (r["query_id"], r["doc_id"], r["n_bands"])
-        for r in index.query(queries, alpha=1).collect()
+        for r in query_neighbors(
+            read_stage(spark, index.index_dir), _query_buckets(queries)
+        ).collect()
     }
     direct = {
         (r["query_id"], r["doc_id"], r["n_bands"])
@@ -59,214 +69,123 @@ def test_query_matches_unindexed_path(spark, corpus, index):
 
 
 def test_query_prune_equivalence(spark, corpus, index):
+    """Pruning the index to the query's shards (shard_expr over the query's
+    band keys) loses no neighbor: the writer and the probe share one shard
+    derivation."""
     queries = corpus.where(F.col("doc_id") == SYNTH.dup_start)
+    qb = _query_buckets(queries)
+    shards = [
+        r["shard"]
+        for r in qb.select(shard_expr(N_SHARDS).alias("shard"))
+        .distinct()
+        .collect()
+    ]
+    table = read_stage(spark, index.index_dir)
     pruned = {
-        tuple(r) for r in index.query(queries, prune_shards=True).collect()
+        tuple(r)
+        for r in query_neighbors(
+            table.where(F.col("shard").isin(shards)), qb
+        ).collect()
     }
-    full = {
-        tuple(r) for r in index.query(queries, prune_shards=False).collect()
-    }
-    assert pruned == full
+    full = {tuple(r) for r in query_neighbors(table, qb).collect()}
+    assert len(shards) < N_SHARDS
+    assert pruned == full and full
 
 
-def test_append_extends_index(spark, corpus, index):
+def test_append_extends_index(spark, corpus, tmp_path):
+    inc = IncrementalDedup(CFG, str(tmp_path / "work"), n_shards=N_SHARDS)
+    inc.process_batch(corpus, epoch_id=0)
+    before = read_stage(spark, inc.index_dir).count()
     extra = generate_pages(spark, SynthConfig(n_docs=50, seed=99)).withColumn(
         "doc_id", F.col("doc_id") + 1_000_000
     )
-    before = index.buckets(spark).count()
-    index.append(extra)
-    after = index.buckets(spark).count()
+    inc.process_batch(extra, epoch_id=1)
+    after = read_stage(spark, inc.index_dir).count()
     assert after > before
     # an appended doc must now be findable by querying with itself
     probe = extra.where(F.col("doc_id") == 1_000_010)
-    got = index.query(probe, alpha=CFG.num_bands, exclude_self=False).collect()
+    got = query_neighbors(
+        read_stage(spark, inc.index_dir),
+        _query_buckets(probe),
+        alpha=CFG.num_bands,
+        exclude_self=False,
+    ).collect()
     assert any(r["doc_id"] == 1_000_010 for r in got)
-
-
-def test_bucketed_table_elides_shuffle(spark, corpus, index):
-    """hash_bucketed writes the index hash-bucketed by the banding keys;
-    the bucket-size aggregation over it must plan WITHOUT an Exchange,
-    and candidate pairs must equal the unbucketed path's."""
-    import io as _io
-    import re
-    from contextlib import redirect_stdout
-
-    index.hash_bucketed(corpus, "lsh_idx_bucketed", n_buckets=8)
-    t = spark.table("lsh_idx_bucketed")
-    agg = t.groupBy("band_idx", "band_key").count()
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        agg.explain("formatted")
-    plan = buf.getvalue()
-    assert not re.search(r"(?<!Broadcast)Exchange \(\d+\)", plan), plan
-
-    from lsh_qd_spark.operators.pairs import candidate_pairs
-
-    via_table = {
-        (r["id_a"], r["id_b"], r["n_bands"])
-        for r in index.pairs_from_table(spark, "lsh_idx_bucketed").collect()
-    }
-    # fresh corpus buckets (index.buckets may have been extended by the
-    # append test — module-scoped fixture)
-    pipe_buckets = index.pipe.buckets(index.pipe.signatures_from_text(corpus))
-    direct = {
-        (r["id_a"], r["id_b"], r["n_bands"])
-        for r in candidate_pairs(
-            pipe_buckets,
-            alpha=CFG.alpha,
-            max_bucket_size=CFG.max_bucket_size,
-        ).collect()
-    }
-    assert via_table == direct and via_table
 
 
 def test_incompatible_index_fails_loudly(spark, corpus, index, tmp_path):
     """An index persisted by a different kernel/config must raise on
-    query/append, not equi-join to nothing (silent zero recall). The
-    marker is written by hash()/the stream and checked on every read."""
-    import json
-
-    meta = os.path.join(index.index_ref, "_compat_meta.json")
-    assert os.path.exists(meta)
+    append, not equi-join to nothing (silent zero recall); an
+    execution-only knob change leaves the persisted bytes valid."""
+    meta = os.path.join(index.index_dir, "_compat_meta.json")
     with open(meta) as f:
-        assert json.load(f)["config_hash"] == CFG.key_hash()
-    # same ref, different KEY-AFFECTING config (as after a kernel bump)
-    other = LSHIndex(
-        DedupConfig(rows_per_band=2, num_bands=8), index.index_ref,
-        n_shards=16,
+        marker = json.load(f)
+    assert marker == {"config_hash": CFG.key_hash(), "n_shards": N_SHARDS}
+    one = corpus.limit(1)
+    # same index, different KEY-AFFECTING config (as after a kernel bump)
+    other = IncrementalDedup(
+        DedupConfig(rows_per_band=2, num_bands=8), index.work_dir,
+        n_shards=N_SHARDS,
     )
     with pytest.raises(RuntimeError, match="rebuild"):
-        other.buckets(spark)
-    with pytest.raises(RuntimeError, match="rebuild"):
-        other.append(corpus.limit(1))
-    # same config but a different SHARD LAYOUT: shard values are
-    # pmod(hash, n_shards), so a mismatched reader would prune/join
-    # against the wrong partitions — must raise, not return zero rows
-    with pytest.raises(RuntimeError, match="n_shards"):
-        LSHIndex(CFG, index.index_ref, n_shards=64).buckets(spark)
+        other.process_batch(one, epoch_id=1)
     # an EXECUTION-ONLY knob change (stricter verify threshold, different
-    # alpha) does not invalidate the index — the persisted bytes are
-    # identical, and re-querying at a new threshold is a supported use
-    requery = LSHIndex(
+    # alpha) does not invalidate the index: re-querying at a new threshold
+    # is a supported use. Written to a copy so the shared index stays put.
+    import shutil
+
+    work = str(tmp_path / "work")
+    shutil.copytree(index.work_dir, work)
+    requery = IncrementalDedup(
         DedupConfig(
             rows_per_band=CFG.rows_per_band,
             num_bands=CFG.num_bands,
             jaccard_threshold=0.95,
             alpha=3,
         ),
-        index.index_ref,
-        n_shards=16,
+        work,
+        n_shards=N_SHARDS,
     )
-    assert requery.buckets(spark).count() > 0
-    # matching config keeps working
-    assert index.buckets(spark).count() > 0
-    # a marker-less (pre-versioning) index is tolerated
-    os.remove(meta)
-    assert other.buckets(spark).count() > 0
+    requery.process_batch(one, epoch_id=1)
+    assert read_stage(spark, requery.index_dir).count() > 0
 
 
 def test_append_to_unmarked_index_refuses(spark, corpus, tmp_path):
     """Appending into an existing index whose marker is missing must
     raise (unknown builder — mixing band-key generations then stamping
-    the mix as current would launder the corruption); querying the same
-    unmarked index stays tolerated (pre-versioning read path)."""
-    ref = str(tmp_path / "unmarked")
-    idx = LSHIndex(CFG, ref, n_shards=16)
-    idx.hash(corpus)
-    os.remove(os.path.join(ref, "_compat_meta.json"))
-    idx.buckets(spark)  # read path: fine
+    the mix as current would launder the corruption); reading the same
+    unmarked index stays possible."""
+    inc = IncrementalDedup(CFG, str(tmp_path / "work"), n_shards=N_SHARDS)
+    inc.process_batch(corpus.limit(40), epoch_id=0)
+    os.remove(os.path.join(inc.index_dir, "_compat_meta.json"))
+    assert read_stage(spark, inc.index_dir).count() > 0  # read path: fine
     with pytest.raises(RuntimeError, match="no _compat_meta.json"):
-        idx.append(corpus.limit(1))
+        inc.process_batch(corpus.limit(1), epoch_id=1)
 
 
 def test_append_first_index_is_marked_and_appendable(spark, corpus, tmp_path):
-    """An index whose FIRST batch arrives via append() (no prior hash())
-    must stamp the compat marker like hash() does — otherwise every later
-    append() raises a spurious rebuild instruction and the read path
-    silently loses compat protection."""
-    ref = str(tmp_path / "append_born")
-    idx = LSHIndex(CFG, ref, n_shards=16)
-    idx.append(corpus.limit(40))
-    assert os.path.exists(os.path.join(ref, "_compat_meta.json"))
-    before = idx.buckets(spark).count()
-    idx.append(
-        corpus.limit(10).withColumn("doc_id", F.col("doc_id") + 2_000_000)
+    """The first batch stamps the compat marker, so every later batch can
+    append (require_marker holds) instead of raising a spurious rebuild
+    instruction."""
+    inc = IncrementalDedup(CFG, str(tmp_path / "work"), n_shards=N_SHARDS)
+    inc.process_batch(corpus.limit(40), epoch_id=0)
+    assert os.path.exists(os.path.join(inc.index_dir, "_compat_meta.json"))
+    before = read_stage(spark, inc.index_dir).count()
+    inc.process_batch(
+        corpus.limit(10).withColumn("doc_id", F.col("doc_id") + 2_000_000),
+        epoch_id=1,
     )
-    assert idx.buckets(spark).count() > before
-
-
-def test_hash_bucketed_qualified_name_clears_stale_location(spark, corpus, index):
-    """A db-qualified table name resolves to <warehouse>/<db>.db/<table> —
-    the stale-location cleanup must remove THAT directory (a string-join of
-    warehouse + raw name misses it and the CREATE fails with 'location
-    already exists')."""
-    import shutil
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS lshdb")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    stale = os.path.join(wh, "lshdb.db", "idx_qualified")
-    os.makedirs(stale, exist_ok=True)
-    with open(os.path.join(stale, "orphan.parquet"), "w") as f:
-        f.write("stale bytes from a lost catalog")
-    try:
-        index.hash_bucketed(corpus, "lshdb.idx_qualified", n_buckets=4)
-        assert spark.table("lshdb.idx_qualified").count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS lshdb.idx_qualified")
-        spark.sql("DROP DATABASE IF EXISTS lshdb")
-        shutil.rmtree(stale, ignore_errors=True)
-
-
-def test_append_crash_window_does_not_brick(spark, corpus, tmp_path, monkeypatch):
-    """The compat marker is stamped BEFORE the data write: if the first
-    append's data write crashes AFTER committing files, a retry must not
-    find data-without-marker (which require_marker would refuse forever).
-    Simulated by failing write_stage after the marker stamp."""
-    import lsh_qd_spark.io as io_mod
-
-    ref = str(tmp_path / "idx")
-    idx = LSHIndex(DedupConfig(rows_per_band=2, num_bands=8), ref)
-
-    real_write = io_mod.write_stage
-
-    def failing_write(*a, **k):
-        raise RuntimeError("simulated executor loss mid-write")
-
-    monkeypatch.setattr(io_mod, "write_stage", failing_write)
-    with pytest.raises(RuntimeError, match="simulated"):
-        idx.append(corpus)
-    monkeypatch.setattr(io_mod, "write_stage", real_write)
-    # marker exists, data may or may not — the retry must succeed
-    assert os.path.exists(os.path.join(ref, "_compat_meta.json"))
-    idx.append(corpus)
-    assert idx.buckets(spark).count() > 0
+    assert read_stage(spark, inc.index_dir).count() > before
 
 
 def test_exists_recognizes_streaming_layout(spark, corpus, tmp_path):
-    """A streaming-built index (epoch=/shard= layout) holds data: exists()
-    must say so, or append() skips require_marker on it and could stamp
-    unknown band-key generations as current."""
-    from lsh_qd_spark.streaming.incremental import IncrementalDedup
-
-    work = str(tmp_path / "work")
-    cfg = DedupConfig(rows_per_band=2, num_bands=8)
-    inc = IncrementalDedup(cfg, work)
+    """The epoch=/shard= layout holds data with no top-level _SUCCESS
+    file: the existence check must still see it, or a later batch skips
+    both the cross-batch join and require_marker."""
+    inc = IncrementalDedup(
+        DedupConfig(rows_per_band=2, num_bands=8), str(tmp_path / "work")
+    )
+    assert not inc._index_exists()
     inc.process_batch(corpus.limit(50), epoch_id=0)
-    idx = LSHIndex(cfg, inc.index_dir, n_shards=inc.n_shards)
-    assert idx.exists(spark)
-
-
-def test_batch_append_to_streaming_index_refuses(spark, corpus, tmp_path):
-    """Batch append writes top-level shard= partitions; on a
-    streaming-built (epoch=/shard=) index that produces a conflicting
-    partition layout Spark can never read again — refuse loudly and
-    point at IncrementalDedup."""
-    from lsh_qd_spark.streaming.incremental import IncrementalDedup
-
-    work = str(tmp_path / "work")
-    cfg = DedupConfig(rows_per_band=2, num_bands=8)
-    inc = IncrementalDedup(cfg, work)
-    inc.process_batch(corpus.limit(50), epoch_id=0)
-    idx = LSHIndex(cfg, inc.index_dir, n_shards=inc.n_shards)
-    with pytest.raises(RuntimeError, match="IncrementalDedup"):
-        idx.append(corpus.limit(10))
+    assert not os.path.exists(os.path.join(inc.index_dir, "_SUCCESS"))
+    assert inc._index_exists()

@@ -229,3 +229,12 @@ def test_candidate_shingles_is_lazy(spark):
     sh = pipe.candidate_shingles(docs, failing_pairs)  # must not raise
     with pytest.raises(Exception, match="supposedly-lazy"):
         sh.count()
+
+
+@pytest.mark.parametrize("shingle_hash", ["poly", "xxhash64"])
+def test_run_rejects_non_fast_shingle_hash(docs, shingle_hash):
+    """run() has one path, the fused kernel; any other shingle hash is
+    refused up front with a pointer to the stage methods."""
+    pipe = DedupPipeline(DedupConfig(**{**CFG, "shingle_hash": shingle_hash}))
+    with pytest.raises(ValueError, match=r"shingle\(\), signatures\(\)"):
+        pipe.run(docs)

@@ -1,10 +1,8 @@
 """Regression tests for the fourth review pass: session master deferral,
-paper-correct multiprobe scoring, NULL-embedding guards, strict decontam
-k-grams, single-pass PII scrub with zero-not-NULL audits, userinfo URL
-canonicalization, degenerate min-max normalize, and extract_text edges."""
+the p-stable NULL-embedding guard, strict decontam k-grams, single-pass PII
+scrub with zero-not-NULL audits, userinfo URL canonicalization, and
+extract_text edges."""
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -26,49 +24,6 @@ def test_resolve_master_defers_to_spark_submit():
         _resolve_master(None, {"SPARK_GRAFT_MASTER": "local[2]"})
         == "local[2]"
     )
-
-
-# --- multiprobe: squared boundary distances (Lv et al. §4.4) ----------------
-
-def test_multiprobe_squared_score_ordering():
-    """frac = (0.45, 0.8). Squared scores: coord1 +1 = 0.2² = 0.04,
-    coord0 -1 = 0.45² = 0.2025, pair {coord1 +1, coord0 -1} = 0.2425,
-    coord0 +1 = 0.55² = 0.3025 — so probe 3 is the PAIR. A linear sum
-    would invert exactly that step: pair 0.2 + 0.45 = 0.65 ranks AFTER
-    the coord0 +1 single (0.55), so probe 3 distinguishes the paper's
-    squared scoring from a linear one."""
-    from lsh_qd_spark.functions.multiprobe import probe_keys_for_query
-
-    f = np.array([10.45, 20.8])
-    keys = probe_keys_for_query(f, k=2, n_probes=3)
-    base = keys[0].tolist()
-    assert base == [10, 20]
-    deltas = [(np.array(k) - np.array(base)).tolist() for k in keys[1:]]
-    # probe 1: the cheapest single perturbation is coord1 +1 (0.04)
-    assert deltas[0] == [0, 1]
-    # probe 2: coord0 -1 single (0.2025)
-    assert deltas[1] == [-1, 0]
-    # probe 3: the pair (0.2425) beats coord0 +1 (0.3025) under squared
-    # scoring; linear scoring would emit [1, 0] here instead
-    assert deltas[2] == [-1, 1]
-
-
-def test_multiprobe_null_embedding_emits_no_rows(spark):
-    from lsh_qd_spark.functions.multiprobe import (
-        make_multiprobe_udf,
-        multiprobe_query_buckets,
-    )
-    from lsh_qd_spark.functions.pstable import pstable_coefficients
-
-    a, b = pstable_coefficients(8, 4, r=4.0, seed=1)
-    df = spark.createDataFrame(
-        [(1, [0.1, 0.2, 0.3, 0.4]), (2, None)],
-        "vec_id long, embedding array<double>",
-    )
-    rows = multiprobe_query_buckets(
-        df, a, b, r=4.0, k=2, l=4, n_probes=2
-    ).collect()
-    assert {r["doc_id"] for r in rows} == {1}
 
 
 # --- pstable: NULL embedding hashes to NULL, not a task crash ---------------
@@ -150,19 +105,6 @@ def test_canonical_url_strips_userinfo(spark):
     assert got[0] == got[1] == "http://example.com/x"
     assert got[2] == "https://example.com/y"
     assert "@" not in got[0] and "pass" not in got[2]
-
-
-# --- vectors: degenerate min-max normalize ----------------------------------
-
-def test_min_max_normalize_empty_and_all_null(spark):
-    from lsh_qd_spark.functions.vectors import min_max_normalize
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert min_max_normalize(empty).count() == 0
-    nulls = spark.createDataFrame(
-        [(1, None)], "vec_id long, embedding array<double>"
-    )
-    assert min_max_normalize(nulls).collect()[0]["embedding"] is None
 
 
 # --- extract_text: branch edges preserved by the single-scan rewrite --------

@@ -361,3 +361,26 @@ def test_metrics_zero_hit_epoch_and_bounded_read(spark, tmp_path):
         m = json.load(f)
     assert m["hits"] == 0
     assert inc.hits(spark).count() == 0
+
+
+def test_index_epoch_has_one_file_per_shard(spark, tmp_path):
+    """The bucket index is shuffled on shard before its write: a batch read
+    as several partitions still leaves ONE parquet file per (epoch, shard)
+    directory, not one per task for every shard that task touches."""
+    work = str(tmp_path / "work")
+    pages = generate_pages(spark, SynthConfig(n_docs=300, seed=29)).repartition(4)
+    assert pages.rdd.getNumPartitions() >= 2
+    inc = IncrementalDedup(
+        DedupConfig(rows_per_band=2, num_bands=16, alpha=1), work
+    )
+    inc.process_batch(pages, epoch_id=0)
+    epoch_dir = os.path.join(inc.index_dir, "epoch=0")
+    shard_dirs = [d for d in os.listdir(epoch_dir) if d.startswith("shard=")]
+    assert len(shard_dirs) > 1
+    for d in shard_dirs:
+        files = [
+            f
+            for f in os.listdir(os.path.join(epoch_dir, d))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1, (d, files)
