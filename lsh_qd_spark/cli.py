@@ -241,9 +241,9 @@ def run_batch(spark, args) -> dict:
         if args.plan_only:
             # plan-only's bounded-execution contract (see below) must also
             # cover the JOIN'S BUILD SIDE: the eval table is shingled,
-            # distinct'd and broadcast during the eager pairs/verify jobs,
-            # so an unbounded eval side would burn a full-table job even
-            # though the probe side is sampled.
+            # distinct'd and counted by the size gate when the prep is
+            # applied, so an unbounded eval side would burn a full-table
+            # job even though the probe side is sampled.
             eval_docs = eval_docs.limit(10_000)
 
         preps.append(
@@ -259,7 +259,7 @@ def run_batch(spark, args) -> dict:
 
     if args.plan_only:
         # Plan building is not free of execution here: candidate_pairs
-        # eagerly collects oversized-bucket keys and verify's 'auto' fetch
+        # eagerly counts oversized-bucket keys and verify's 'auto' fetch
         # counts candidate ids, so "explain the real input" would burn most
         # of the job's compute on a 100 TB table — and with a checkpoint
         # dir it would also write stage tables, contradicting "(no write)".
@@ -297,10 +297,10 @@ def run_batch(spark, args) -> dict:
             # replay hours of full-corpus prep shuffles and overwrite it
             # before the pipeline's own resume logic can skip anything.
             # The reuse check runs BEFORE the prep lambdas are applied:
-            # remove_boilerplate materializes eagerly (localCheckpoint
-            # inside operators/clean.py), so applying preps first would
-            # launch the full-corpus prep job and then throw it away on
-            # every resume.
+            # remove_boilerplate and remove_contaminated materialize
+            # eagerly (their localCheckpoints and size-gate counts), so
+            # applying preps first would launch the full-corpus prep job
+            # and then throw it away on every resume.
             from lsh_qd_spark.io import (
                 check_compat_meta,
                 read_stage,

@@ -41,7 +41,7 @@ from lsh_qd_spark.operators.ann import (
     lsh_topk,
 )
 from lsh_qd_spark.operators.band import band_buckets
-from lsh_qd_spark.operators.pairs import _full_pairs
+from lsh_qd_spark.operators.pairs import _full_pairs, bounded_broadcast
 from lsh_qd_spark.operators.suffix import exact_overlap
 from lsh_qd_spark.oracle import (
     # ANN_N_QUERIES/ANN_TOP_K are shared with the brute-force twin
@@ -83,10 +83,10 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = shingled.where(F.size("shingles") > 0).select(
         "doc_id", udf(F.col("shingles")).alias("simhash")
     )
-    # eager localCheckpoint: fp has three consumers below (chunk banding +
-    # the two broadcast fingerprint joins) — unmaterialized, each re-runs
-    # the whole shingle + simhash kernel chain (measured: ~4x the query's
-    # wall time). Blocks are reference-tracked (freed with the plan).
+    # eager localCheckpoint: fp has two consumers below (chunk banding +
+    # the gated fingerprint table) — unmaterialized, each re-runs the
+    # whole shingle + simhash kernel chain (measured: ~4x the query's wall
+    # time). Blocks are reference-tracked (freed with the plan).
     fp = fp.localCheckpoint(eager=True)
     # Verify-before-shuffle candidate flow (optimization guide §2.3
     # "aggregate/filter before you shuffle"). The generic candidate_pairs
@@ -99,7 +99,8 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # C(n,2) candidate pairs (12.5M at sf0.1) were being shuffled to
     # count bands nobody read (measured: ~22 s of the query's 28 s).
     # Instead: explode within-bucket pairs (narrow JVM), attach both
-    # fingerprints by BROADCAST join (fp is id+int64 — tiny), filter
+    # fingerprints by BROADCAST join (fp is id+int64 — tiny; still one row
+    # per document, so it broadcasts only under the size gate), filter
     # Hamming ≤ r BEFORE any exchange, and dedup only the survivors.
     # Result-identical: the same candidate set reaches the same Hamming
     # cut; a pair colliding in several chunks yields identical rows that
@@ -113,13 +114,17 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded = members.select(
         F.explode(_full_pairs(F.col("members"))).alias("pr")
     ).select(F.col("pr.id_a"), F.col("pr.id_b"))
-    f = fp.select(F.col("doc_id").alias("_fid"), F.col("simhash").alias("_fh"))
-    return (
-        exploded.join(
-            F.broadcast(f.withColumnRenamed("_fid", "id_a")), "id_a"
+    # gated separately from fp: a hint on fp itself would be pulled up
+    # through the chunk banding onto the exploded pairs side
+    f, _ = bounded_broadcast(
+        fp.select(
+            F.col("doc_id").alias("_fid"), F.col("simhash").alias("_fh")
         )
+    )
+    return (
+        exploded.join(f.withColumnRenamed("_fid", "id_a"), "id_a")
         .withColumnRenamed("_fh", "h_a")
-        .join(F.broadcast(f.withColumnRenamed("_fid", "id_b")), "id_b")
+        .join(f.withColumnRenamed("_fid", "id_b"), "id_b")
         .withColumnRenamed("_fh", "h_b")
         .select(
             "id_a",

@@ -14,8 +14,9 @@ Scale shape (100 TB):
 - the document-frequency aggregation is one shuffle keyed by the window;
   keys are near-unique (boilerplate is by definition the small hot tail),
   and the ``>= df_threshold`` filter shrinks the flag set to a fraction
-  the join back can often BROADCAST — the common case is exactly that, so
-  the rebuild is one narrow aggregation per doc;
+  the join back can often BROADCAST — counted first, broadcast only under
+  ``pairs.BIG_KEY_BROADCAST_CAP`` (shuffle anti-join above it); in the
+  common case the rebuild is one narrow aggregation per doc;
 - rebuild order rides ``posexplode`` indices: no window function, one
   ``sort_array(collect_list(struct(pos, …)))`` per doc.
 
@@ -30,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsh_qd_spark.functions.text import tokens
+from lsh_qd_spark.operators.pairs import bounded_broadcast
 
 
 def token_segments(toks: F.Column, seg_len: int) -> F.Column:
@@ -54,7 +56,6 @@ def remove_boilerplate(
     df_threshold: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_flagged: bool = True,
 ) -> DataFrame:
     """(<input columns, text rebuilt>, removed_segments): corpus with
     boilerplate windows removed. ``text_col`` is rebuilt from surviving
@@ -99,14 +100,14 @@ def remove_boilerplate(
     exploded = base.select(
         "_bp_id", F.posexplode("_segs").alias("pos", "seg")
     )
-    flagged = (
+    # the flagged set is corpus-derived (a boilerplate-heavy corpus flags
+    # many windows): broadcast only under the size gate
+    flagged, _ = bounded_broadcast(
         exploded.groupBy("seg")
         .agg(F.countDistinct("_bp_id").alias("seg_df"))
         .where(F.col("seg_df") >= df_threshold)
         .select("seg")
     )
-    if broadcast_flagged:
-        flagged = F.broadcast(flagged)
     kept = exploded.join(flagged, "seg", "left_anti")
     rebuilt = kept.groupBy("_bp_id").agg(
         F.concat_ws(

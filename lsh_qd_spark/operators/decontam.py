@@ -11,7 +11,8 @@ operator is that check as a Spark plan:
 
 Scale shape (100 TB training corpus, bounded eval set):
 - the eval side is tiny by construction (benchmarks are thousands of
-  documents, not billions) → its distinct gram set **broadcasts**, so
+  documents, not billions) → its distinct gram set **broadcasts** (under
+  the ``pairs.BIG_KEY_BROADCAST_CAP`` size gate), so
   the training corpus is never shuffled: scan → explode → broadcast-hash
   semi-join → partial-agg groupBy on doc_id. One narrow pass.
 - grams are joined as 64-bit ``xxhash64`` ids (8-byte keys), not
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsh_qd_spark.functions.text import tokens, word_grams
+from lsh_qd_spark.operators.pairs import bounded_broadcast
 
 
 def _strict_gram_strings(col, k: int):
@@ -68,20 +70,20 @@ def contamination(
     hash_family: str = "xxhash64",
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """(doc_id, n_shared_grams): training documents sharing ≥ 1 distinct
     k-gram with ``eval_docs``, with how many distinct grams they share.
 
-    ``broadcast_eval=False`` falls back to a shuffle join for the rare
-    eval set too large to broadcast (the plan is otherwise identical).
+    The eval gram set goes through the size gate: the rare eval set too
+    large to broadcast joins by shuffle instead (the plan is otherwise
+    identical).
     """
     tg = _grams(train, k, hash_family, text_col, id_col)
-    eg = _grams(eval_docs, k, hash_family, text_col, id_col).select(
-        "gram"
-    ).distinct()
-    if broadcast_eval:
-        eg = F.broadcast(eg)
+    eg, _ = bounded_broadcast(
+        _grams(eval_docs, k, hash_family, text_col, id_col)
+        .select("gram")
+        .distinct()
+    )
     return (
         tg.join(eg, "gram")
         .groupBy("doc_id")
@@ -97,8 +99,6 @@ def remove_contaminated(
     hash_family: str = "xxhash64",
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_eval: bool = True,
-    broadcast_flagged: bool = True,
 ) -> DataFrame:
     """``train`` minus documents sharing ≥ ``min_shared`` distinct k-grams
     with the eval set — the corpus-cleaning transformation behind the
@@ -107,16 +107,12 @@ def remove_contaminated(
 
     The flagged set is "every contaminated training doc" — usually tiny,
     but UNBOUNDED (a boilerplate-heavy corpus with a small ``k`` or
-    ``min_shared=1`` can flag a large fraction of the corpus). Pass
-    ``broadcast_flagged=False`` to anti-join via shuffle instead of
-    collecting the flagged ids onto the driver — the same escape hatch
-    ``contamination`` exposes for an oversized eval side."""
-    flagged = contamination(
-        train, eval_docs, k, hash_family, text_col, id_col,
-        broadcast_eval=broadcast_eval,
-    ).where(F.col("n_shared_grams") >= min_shared).select(
-        F.col("doc_id").alias(id_col)
+    ``min_shared=1`` can flag a large fraction of the corpus), so it goes
+    through the same size gate as the eval side: counted, broadcast under
+    the cap, anti-joined via shuffle over it."""
+    flagged, _ = bounded_broadcast(
+        contamination(train, eval_docs, k, hash_family, text_col, id_col)
+        .where(F.col("n_shared_grams") >= min_shared)
+        .select(F.col("doc_id").alias(id_col))
     )
-    if broadcast_flagged:
-        flagged = F.broadcast(flagged)
     return train.join(flagged, id_col, "left_anti")

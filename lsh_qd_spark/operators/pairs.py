@@ -31,10 +31,11 @@ from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
-# Max number of oversized-bucket KEYS collected to the driver + broadcast.
-# Rows are narrow (int, short string, long ≈ 100 B) → 500k keys ≈ 50 MB
-# broadcast. Above this the code falls back to a shuffle join on the keys —
-# still correct, one extra wide stage — rather than silently truncating.
+# Row cap of bounded_broadcast for narrow corpus-derived sets (oversized-
+# bucket keys, batch keys, flagged ids/windows, eval grams, fingerprints).
+# Rows are narrow (int, short string, long ≈ 100 B) → 500k rows ≈ 50 MB
+# broadcast. Above this the joins fall back to shuffle joins — still
+# correct, one extra wide stage — rather than silently truncating.
 BIG_KEY_BROADCAST_CAP = 500_000
 
 
@@ -52,23 +53,95 @@ def _full_pairs(members: Column) -> Column:
     )
 
 
-def counted_plus_stars(counted: DataFrame, star_pairs: DataFrame) -> DataFrame:
+def bounded_broadcast(
+    df: DataFrame, cap: int | None = None
+) -> tuple[DataFrame, int]:
+    """THE size gate: ``(frame, n)`` — ``df`` lazily localCheckpointed,
+    its row count ``n``, and a broadcast hint on the frame only when
+    ``n <= cap``. Over the cap the frame comes back unhinted, so its joins
+    run as shuffle joins against the checkpointed rows: slower but correct
+    at any size, never a silent truncation or a driver OOM (a hint
+    bypasses ``autoBroadcastJoinThreshold``). ``cap`` defaults to
+    ``BIG_KEY_BROADCAST_CAP``, read at call time.
+
+    Lazy checkpoint + count: the count materializes the blocks in ONE
+    full-parallel job, and every consumer after it (the joins, any
+    bounded collect) reads cached blocks — the upstream plan runs once.
+    Not ``limit(cap+1).collect()``: CollectLimit's incremental scale-up
+    runs 3-4 sequential partial jobs.
+
+    localCheckpoint, not persist(): downstream joins consume the frame
+    lazily, so a plain persist could never be unpersisted here and would
+    sit in executor storage for the life of the session; checkpoint blocks
+    are reference-tracked and freed with the plan. Fault-tolerance trade
+    (applies to every localCheckpoint in this package): blocks are
+    non-replicated, so losing an executor mid-job fails the JOB instead of
+    recomputing from lineage — a failed run re-runs and resumes from the
+    DedupPipeline stage store. On clusters with aggressive dynamic
+    allocation / preemption, prefer a checkpoint_dir so stage tables, not
+    executor blocks, carry the state."""
+    cap = BIG_KEY_BROADCAST_CAP if cap is None else cap
+    df = df.localCheckpoint(eager=False)
+    n = df.count()
+    if n <= cap:
+        return F.broadcast(df), n
+    log.warning("%d rows over the broadcast cap %d: shuffle joins", n, cap)
+    return df, n
+
+
+def split_oversized_buckets(
+    buckets: DataFrame,
+    keys: list[str],
+    rep: Column,
+    max_bucket_size: int,
+    cap: int | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """``(small_buckets, big)``: the mega-bucket split shared by the batch
+    (candidate_pairs) and streaming (IncrementalDedup) pair producers.
+
+    One narrow aggregation over ``keys`` computes each bucket's size and
+    the caller's representative aggregate ``rep``; the oversized buckets'
+    ``(keys…, rep)`` rows go through ``bounded_broadcast`` (by
+    construction at most total_rows / max_bucket_size of them, in practice
+    a handful of boilerplate clusters). ``small_buckets`` is ``buckets``
+    minus every oversized bucket's rows (an anti-join on ``keys``); ``big``
+    is None — and ``small_buckets`` is ``buckets`` itself — when no bucket
+    is oversized. Callers build their own star edges from ``big``."""
+    big, n_big = bounded_broadcast(
+        buckets.groupBy(*keys)
+        .agg(F.count("*").alias("bucket_n"), rep.alias("rep"))
+        .where(F.col("bucket_n") > max_bucket_size)
+        .select(*keys, "rep"),
+        cap,
+    )
+    if not n_big:
+        return buckets, None
+    log.info("%d oversized buckets split into star edges", n_big)
+    return buckets.join(big.select(*keys), keys, "left_anti"), big
+
+
+def counted_plus_stars(
+    counted: DataFrame, star_pairs: DataFrame | None
+) -> DataFrame:
     """Union alpha-counted pairs with mega-bucket star edges under the
     consumer contract (see candidate_pairs): a pair that is BOTH counted
     (small buckets) and starred (a mega bucket in another band) keeps only
     the counted row; surviving star rows carry sentinel ``n_bands=0`` and
     ``via_star=True``. THE tail shared by every pair producer
-    (candidate_pairs, ``IncrementalDedup.pairs``) so the contract cannot
-    drift between them.
+    (candidate_pairs, ``IncrementalDedup``'s per-epoch hits and its
+    ``pairs``) so the contract cannot drift between them.
 
     ``counted`` carries (id_a, id_b, n_bands) with the alpha cut already
-    applied; ``star_pairs`` is the distinct (id_a, id_b) star edges.
+    applied; ``star_pairs`` is the distinct (id_a, id_b) star edges, or
+    None when there are none.
     ``counted`` is eagerly localCheckpointed: it feeds the union AND the
     anti-join, and column pruning canonicalizes the two subplans
     differently so exchange reuse does NOT kick in — without
     materialization the whole upstream chain executes twice (measured: 2x
     the pairs task time at 300k pages). Blocks are reference-tracked, and
     the checkpointed set is small (post-alpha pairs, not bucket rows)."""
+    if star_pairs is None:
+        return counted.withColumn("via_star", F.lit(False))
     counted = counted.withColumn("via_star", F.lit(False)).localCheckpoint(
         eager=True
     )
@@ -105,82 +178,23 @@ def candidate_pairs(
     mega-bucket edges the star mechanism exists to preserve
     (``query.alpha_tiers`` does this).
     """
-    # Phase 1 (narrow shuffle): bucket sizes + representative. Keys of
-    # oversized buckets are COLLECTED to the driver and broadcast —
-    # by construction there are at most (total_rows / cap) of them, and
-    # in practice a handful (boilerplate/empty-page clusters). This
-    # replaces a full-table sort-merge join of bucket rows against
-    # their sizes with two map-side broadcast joins.
-    sizes = buckets.groupBy("band_idx", "band_key").agg(
-        F.count("*").alias("bucket_n"), F.min("doc_id").alias("rep")
+    # Phase 1 (narrow shuffle): bucket sizes + representative; the few
+    # oversized keys are broadcast into two map-side joins. This replaces
+    # a full-table sort-merge join of bucket rows against their sizes.
+    keys = ["band_idx", "band_key"]
+    small_buckets, big = split_oversized_buckets(
+        buckets, keys, F.min("doc_id"), max_bucket_size, big_key_broadcast_cap
     )
-    big = sizes.where(F.col("bucket_n") > max_bucket_size).select(
-        "band_idx", "band_key", "rep"
-    )
-    # No silent truncation. localCheckpoint FIRST, then decide:
-    # the old limit(cap+1).collect() decision ran CollectLimit's
-    # incremental scale-up — 3-4 sequential partial jobs (1, 4, 20, …
-    # partitions) since real big-key counts sit far below the cap —
-    # a fixed serial-latency tax on every pairs call. The checkpoint
-    # materializes `big` in ONE full-parallel job; the count and any
-    # bounded collect after it read cached blocks. Truncated lineage
-    # also guarantees the upstream signature kernel runs only once
-    # (count+collect on the raw plan would re-run it over the corpus).
-    #
-    # localCheckpoint, not persist(): downstream joins consume
-    # it lazily, so a plain persist could never be unpersisted from
-    # here and would sit in executor storage for the life of the
-    # session. Checkpoint blocks are reference-tracked — freed when
-    # the returned plan is dropped.
-    #
-    # Fault-tolerance trade (applies to every localCheckpoint in this
-    # package): blocks are non-replicated, so losing an executor
-    # mid-job fails the JOB instead of recomputing the partition from
-    # lineage. That is the accepted cost of not leaking
-    # session-lifetime cache: a failed run re-runs and resumes from
-    # the DedupPipeline stage store (the durable checkpoint layer).
-    # On clusters with aggressive dynamic allocation / preemption,
-    # prefer a checkpoint_dir so stage tables, not executor blocks,
-    # carry the state.
-    # lazy + count: the count materializes the checkpoint blocks in
-    # the same full-parallel job (one action instead of eager-then-
-    # count's two; cluster.py's loop uses the same pattern)
-    big_ck = big.localCheckpoint(eager=False)
-    n_big = big_ck.count()
-    if n_big > 0:
-        if n_big <= big_key_broadcast_cap:
-            # broadcast straight off the cached blocks (two map-side
-            # joins, no extra wide stage)
-            big_df = F.broadcast(big_ck)
-            log.info(
-                "candidate_pairs: %d oversized-bucket keys (broadcast)", n_big
-            )
-        else:
-            # beyond the budget the same joins run as shuffle joins
-            # against the checkpointed keys — slower but correct at
-            # ANY number of mega-buckets
-            big_df = big_ck
-            log.warning(
-                "candidate_pairs: more than %d oversized-bucket keys; "
-                "using shuffle joins for the mega-bucket split",
-                big_key_broadcast_cap,
-            )
-        small_buckets = buckets.join(
-            big_df.select("band_idx", "band_key"),
-            ["band_idx", "band_key"],
-            "left_anti",
-        )
+    large_pairs = None
+    if big is not None:
         # STAR edges for mega-buckets: (rep, member) — O(n) per bucket,
         # keeps the component connected without O(n^2) pairs.
         large_pairs = (
-            buckets.join(big_df, ["band_idx", "band_key"])
+            buckets.join(big, keys)
             .where(F.col("doc_id") != F.col("rep"))
             .select(F.col("rep").alias("id_a"), F.col("doc_id").alias("id_b"))
             .distinct()
         )
-    else:
-        small_buckets = buckets
-        large_pairs = None
     # Phase 2 (one wide shuffle): bounded collect per bucket + JVM pair
     # explosion. Singleton buckets are dropped before expansion.
     # collect_set, not collect_list: duplicate (band, key, doc_id) rows
@@ -199,6 +213,4 @@ def candidate_pairs(
         .agg(F.count("*").alias("n_bands"))
         .where(F.col("n_bands") >= alpha)
     )
-    if large_pairs is None:
-        return counted.withColumn("via_star", F.lit(False))
     return counted_plus_stars(counted, large_pairs)

@@ -11,7 +11,7 @@ Semantics notes carried from the reference:
 - the non-idx query path INCLUDES self-collisions (lsh-qd.py:129-131);
   ``exclude_self=True`` reproduces ``query_idx``'s self-exclusion
   (lsh-qd.py:145-148) by doc_id equality instead.
-- query sides are typically small → broadcast by default.
+- the query side is small by contract → always broadcast.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from lsh_qd_spark.config import DedupConfig
 from lsh_qd_spark.operators.band import band_buckets
+from lsh_qd_spark.operators.pairs import bounded_broadcast
 from lsh_qd_spark.plans.pipeline import DedupPipeline
 
 
@@ -29,16 +30,15 @@ def query_neighbors(
     query_buckets: DataFrame,
     alpha: int = 1,
     exclude_self: bool = True,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """(query_id, doc_id, n_bands): corpus docs colliding with each query
     in ≥ alpha bands. Both inputs are (id, band_idx, band_key) bucket rows
     (build with DedupPipeline.buckets / band_buckets)."""
-    q = query_buckets.select(
-        F.col("doc_id").alias("query_id"), "band_idx", "band_key"
+    q = F.broadcast(
+        query_buckets.select(
+            F.col("doc_id").alias("query_id"), "band_idx", "band_key"
+        )
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
     hits = corpus_buckets.join(q, ["band_idx", "band_key"])
     if exclude_self:
         hits = hits.where(F.col("doc_id") != F.col("query_id"))
@@ -80,17 +80,16 @@ def query_text_neighbors(
     # queries twice (the same double-execution shape pairs.py checkpoints
     # against). Blocks are reference-tracked (freed with the plan).
     out = out.localCheckpoint(eager=True)
-    cand_ids = out.select("doc_id").distinct()
     # bound the broadcast the same way verify.py does: a hot bucket
     # colliding with a query can return a large fraction of the corpus —
-    # broadcasting an unbounded id set OOMs the driver. Counting is cheap
-    # post-checkpoint; over the cap, fall back to a plain (shuffled)
-    # semi-join instead of truncating.
-    # the CONFIGURED cap, not the module constant: a memory-constrained
-    # run that lowered verify_broadcast_ids_cap must see it honored here
-    # too, or this path broadcasts what verify just refused to
-    if cand_ids.count() <= cfg.verify_broadcast_ids_cap:
-        cand_ids = F.broadcast(cand_ids)
+    # broadcasting an unbounded id set OOMs the driver; over the cap the
+    # semi-join runs shuffled instead of truncating. The CONFIGURED cap,
+    # not the module constant: a memory-constrained run that lowered
+    # verify_broadcast_ids_cap must see it honored here too, or this path
+    # broadcasts what verify just refused to
+    cand_ids, _ = bounded_broadcast(
+        out.select("doc_id").distinct(), cfg.verify_broadcast_ids_cap
+    )
     csh = pipe.shingle(
         corpus_docs.join(cand_ids, "doc_id", "left_semi")
     )

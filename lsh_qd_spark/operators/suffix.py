@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lsh_qd_spark.operators.verify import _pairs_with_texts
+
 
 def suffix_array(codes: np.ndarray) -> np.ndarray:
     """Suffix array by rank doubling (argsort-based), O(n log^2 n)."""
@@ -103,47 +105,14 @@ def exact_overlap(
     """(id_a, id_b, overlap_len) for pairs sharing an exact substring of at
     least ``min_len`` characters (in normalized-text space).
 
-    Candidate text reaches the kernel through the SAME fetch discipline as
-    the Jaccard verify (operators/verify.py:_auto_fetch): semi-join the
+    Candidate text reaches the kernel through the SAME fetch as the
+    Jaccard verify (operators/verify.py:_pairs_with_texts): semi-join the
     corpus against the candidate-id set and broadcast/checkpoint the
     surviving texts when they fit, falling back to plain equi-joins only
-    when candidates are corpus-scale — joining the pair list directly
-    against the full docs table twice (the old shape) pays two corpus
-    scans + shuffles that the rest of the engine engineered away."""
-    from lsh_qd_spark.config import VERIFY_BROADCAST_IDS_CAP
-    from lsh_qd_spark.operators.verify import _auto_fetch
-
-    if fetch not in ("auto", "broadcast_ids", "shuffle"):
-        raise ValueError(f"unknown fetch mode: {fetch!r}")
-    t = docs.select(F.col(id_col).alias("_vid"), F.col(text_col).alias("_vtx"))
-    ids = (
-        pairs.select(F.col("id_a").alias("_vid"))
-        .union(pairs.select(F.col("id_b").alias("_vid")))
-        .distinct()
-    )
-    if fetch == "auto":
-        fetch, tchk = _auto_fetch(
-            ids, t, VERIFY_BROADCAST_IDS_CAP, 512 * 1024 * 1024
-        )
-        if tchk is not None:
-            t = tchk
-    elif fetch == "broadcast_ids":
-        # explicit mode mirrors verify_pairs_text: broadcast the
-        # CANDIDATE texts (semi-join first), never the whole corpus
-        t = t.join(F.broadcast(ids), "_vid", "left_semi").localCheckpoint(
-            eager=True
-        )
-
-    def side(alias: str):
-        s = t.withColumnRenamed("_vid", alias)
-        return F.broadcast(s) if fetch == "broadcast_ids" else s
-
-    joined = (
-        pairs.select("id_a", "id_b")
-        .join(side("id_a"), "id_a")
-        .withColumnRenamed("_vtx", "text_a")
-        .join(side("id_b"), "id_b")
-        .withColumnRenamed("_vtx", "text_b")
+    when candidates are corpus-scale — a direct join of the pair list
+    against the full docs table pays two corpus scans + shuffles."""
+    joined = _pairs_with_texts(
+        pairs.select("id_a", "id_b"), docs, id_col, text_col, fetch
     )
 
     def compute(batches):
@@ -151,7 +120,7 @@ def exact_overlap(
             out = pdf[["id_a", "id_b"]].copy()
             out["overlap_len"] = [
                 longest_common_substring(a or "", b or "")
-                for a, b in zip(pdf["text_a"], pdf["text_b"])
+                for a, b in zip(pdf["_tx_a"], pdf["_tx_b"])
             ]
             yield out
 

@@ -6,8 +6,10 @@ recomputed post-hoc in its eval at ``lsh-qd.py:753,789``). Here it is a
 first-class stage per the north rule: join candidate pairs back to their
 shingle arrays and keep pairs with Jaccard ≥ threshold.
 
-All JVM-side: ``array_intersect``/``array_union`` on the (distinct) shingle
-arrays — shingle arrays are deduplicated at creation so set semantics hold.
+``verify_pairs_text`` (the production path ``DedupPipeline.run`` takes)
+fetches candidate text and computes shingle sets + Jaccard in one batched
+NumPy kernel; ``verify_pairs`` (the staged shingle-array path) stays
+JVM-side with ``array_intersect``/``array_union`` on the (distinct) arrays.
 """
 
 from __future__ import annotations
@@ -18,8 +20,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lsh_qd_spark.config import VERIFY_BROADCAST_IDS_CAP
+from lsh_qd_spark.operators.pairs import bounded_broadcast
 
 logger = logging.getLogger(__name__)
+
+# byte budget for broadcasting candidate texts into both pair joins
+VERIFY_BROADCAST_BYTES_CAP = 512 * 1024 * 1024
 
 
 def jaccard_expr(a: Column, b: Column) -> Column:
@@ -65,17 +71,14 @@ def _auto_fetch(
     runs: at most ``broadcast_ids_cap`` texts land in (distributed,
     reference-tracked) executor storage — comparable bytes to what the
     candidate_shuffle joins move anyway, and never driver-resident."""
-    # checkpoint FIRST: ``ids`` (a union+distinct shuffle over the
-    # pairs table) has two consumers here — the count gate and the
-    # broadcast semi-join build — and an uncheckpointed plan runs that
-    # wide stage twice per verify call. In the over-cap (shuffle-mode)
-    # outcome the materialized id blocks go unused, but they are
-    # reference-tracked (freed with the plan) and ids-only rows are tiny
-    # relative to the two corpus scans that mode is about to pay.
-    # LAZY checkpoint + count: the count materializes the blocks in the
-    # same job (cluster.py's loop pattern) — one action instead of two.
-    ids = ids.localCheckpoint(eager=False)
-    n_ids = ids.count()
+    # gate FIRST: ``ids`` (a union+distinct shuffle over the pairs table)
+    # has two consumers here — the count gate and the broadcast semi-join
+    # build — and the gate's checkpoint runs that wide stage once. In the
+    # over-cap (shuffle-mode) outcome the materialized id blocks go unused,
+    # but they are reference-tracked (freed with the plan) and ids-only
+    # rows are tiny relative to the two corpus scans that mode is about to
+    # pay.
+    ids, n_ids = bounded_broadcast(ids, broadcast_ids_cap)
     if n_ids > broadcast_ids_cap:
         # the one mode that rescans + reshuffles the whole corpus twice —
         # loud, so a run that fell off the candidate-bounded path is
@@ -93,9 +96,7 @@ def _auto_fetch(
     # without it the corpus scan + semi-join would re-run per consumer.
     # Blocks are reference-tracked (freed with the plan). Lazy: the byte
     # aggregate right below materializes it in the same job.
-    tchk = t.join(F.broadcast(ids), "_vid", "left_semi").localCheckpoint(
-        eager=False
-    )
+    tchk = t.join(ids, "_vid", "left_semi").localCheckpoint(eager=False)
     # octet_length, not length: the cap guards executor MEMORY, and on
     # non-ASCII corpora (CJK ~3 UTF-8 bytes/char) character count would
     # undercount the broadcast payload up to ~4x
@@ -120,6 +121,53 @@ def _auto_fetch(
     return mode, tchk
 
 
+def _pairs_with_texts(
+    pairs: DataFrame,
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    fetch: str = "auto",
+    broadcast_ids_cap: int = VERIFY_BROADCAST_IDS_CAP,
+    broadcast_bytes_cap: int = VERIFY_BROADCAST_BYTES_CAP,
+) -> DataFrame:
+    """``pairs`` plus both sides' text as ``_tx_a``/``_tx_b`` — THE
+    candidate-text fetch, shared by the Jaccard verify and
+    ``suffix.exact_overlap``. ``verify_pairs_text`` documents the
+    ``fetch`` modes; ``_auto_fetch`` the gates behind ``"auto"``."""
+    if fetch not in ("auto", "broadcast_ids", "shuffle"):
+        raise ValueError(f"unknown fetch mode: {fetch!r}")
+    t = docs.select(F.col(id_col).alias("_vid"), F.col(text_col).alias("_vtx"))
+    ids = (
+        pairs.select(F.col("id_a").alias("_vid"))
+        .union(pairs.select(F.col("id_b").alias("_vid")))
+        .distinct()
+    )
+    if fetch == "auto":
+        fetch, tchk = _auto_fetch(ids, t, broadcast_ids_cap, broadcast_bytes_cap)
+        if tchk is not None:
+            t = tchk
+    elif fetch == "broadcast_ids":
+        # eager localCheckpoint: BOTH pair joins consume t — without it the
+        # corpus scan + semi-join would re-run per side. Blocks are
+        # reference-tracked (freed with the plan), lineage is truncated.
+        t = t.join(F.broadcast(ids), "_vid", "left_semi").localCheckpoint(
+            eager=True
+        )
+
+    def side(alias: str):
+        s = t.withColumnRenamed("_vid", alias)
+        # hint applied per join side (a hint wrapped under later
+        # projections is not guaranteed to survive resolution)
+        return F.broadcast(s) if fetch == "broadcast_ids" else s
+
+    return (
+        pairs.join(side("id_a"), "id_a")
+        .withColumnRenamed("_vtx", "_tx_a")
+        .join(side("id_b"), "id_b")
+        .withColumnRenamed("_vtx", "_tx_b")
+    )
+
+
 def verify_pairs_text(
     pairs: DataFrame,
     docs: DataFrame,
@@ -129,7 +177,7 @@ def verify_pairs_text(
     text_col: str = "text",
     fetch: str = "auto",
     broadcast_ids_cap: int = VERIFY_BROADCAST_IDS_CAP,
-    broadcast_bytes_cap: int = 512 * 1024 * 1024,
+    broadcast_bytes_cap: int = VERIFY_BROADCAST_BYTES_CAP,
 ) -> DataFrame:
     """Jaccard verify straight from text — the production path.
 
@@ -174,37 +222,14 @@ def verify_pairs_text(
 
     from lsh_qd_spark.functions.fast_shingle import shingle_sets
 
-    t = docs.select(F.col(id_col).alias("_vid"), F.col(text_col).alias("_vtx"))
-    if fetch not in ("auto", "broadcast_ids", "shuffle"):
-        raise ValueError(f"unknown fetch mode: {fetch!r}")
-    ids = (
-        pairs.select(F.col("id_a").alias("_vid"))
-        .union(pairs.select(F.col("id_b").alias("_vid")))
-        .distinct()
-    )
-    if fetch == "auto":
-        fetch, tchk = _auto_fetch(ids, t, broadcast_ids_cap, broadcast_bytes_cap)
-        if tchk is not None:
-            t = tchk
-    elif fetch == "broadcast_ids":
-        # eager localCheckpoint: BOTH pair joins consume t — without it the
-        # corpus scan + semi-join would re-run per side. Blocks are
-        # reference-tracked (freed with the plan), lineage is truncated.
-        t = t.join(F.broadcast(ids), "_vid", "left_semi").localCheckpoint(
-            eager=True
-        )
-
-    def side(alias: str):
-        s = t.withColumnRenamed("_vid", alias)
-        # hint applied per join side (a hint wrapped under later
-        # projections is not guaranteed to survive resolution)
-        return F.broadcast(s) if fetch == "broadcast_ids" else s
-
-    joined = (
-        pairs.join(side("id_a"), "id_a")
-        .withColumnRenamed("_vtx", "_tx_a")
-        .join(side("id_b"), "id_b")
-        .withColumnRenamed("_vtx", "_tx_b")
+    joined = _pairs_with_texts(
+        pairs,
+        docs,
+        id_col,
+        text_col,
+        fetch,
+        broadcast_ids_cap,
+        broadcast_bytes_cap,
     )
     pair_cols = list(pairs.columns)  # plain strings: safe to close over
     schema_parts = [

@@ -327,33 +327,6 @@ class DedupPipeline:
             F.col(id_col).alias("doc_id"), udf(F.col(text_col)).alias("sig")
         )
 
-    def candidate_shingles(
-        self,
-        docs: DataFrame,
-        pairs: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-    ) -> DataFrame:
-        """Shingle sets for candidate-pair documents only (the verify stage
-        needs no others — typically a small fraction of the corpus).
-
-        Fully LAZY: no count gate, no checkpoint, no broadcast hint. The
-        id set has exactly one consumer (the semi-join), so nothing
-        double-runs, and AQE upgrades the semi-join's build side to a
-        broadcast at runtime when it actually fits — a driver-side count
-        here would charge every fused-path run() eager jobs for an output
-        most callers (e.g. the CLI, which reads only verified/clusters)
-        never touch. An unbroadcastable (corpus-scale) id set degrades to
-        a shuffled semi-join, never a driver OOM."""
-        ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .union(pairs.select(F.col("id_b")))
-            .distinct()
-        )
-        return self.shingle(
-            docs.join(ids, id_col, "left_semi"), text_col, id_col
-        )
-
     def buckets(self, sigs: DataFrame, key_mode: str = "xxhash64") -> DataFrame:
         c = self.config
         return band_buckets(sigs, c.rows_per_band, c.num_bands, key_mode)
@@ -514,11 +487,6 @@ class DedupPipeline:
                 broadcast_ids_cap=self.config.verify_broadcast_ids_cap,
             ),
         )
-        # genuinely lazy (no count/checkpoint inside — see
-        # candidate_shingles): constructing it here costs no jobs; it
-        # derives from the persisted pairs stage for callers that
-        # consume the sets
-        shingled = self.candidate_shingles(docs, cand, text_col, id_col)
         # Singleton vertices = every doc with a non-null sig (reference
         # empty-set skip). Derived from the BUCKETS stage — persisted or
         # checkpointed above — not from sigs: a `sig IS NOT NULL` filter on
@@ -539,7 +507,6 @@ class DedupPipeline:
             identity={"include_singletons": include_singletons},
         )
         return {
-            "shingles": shingled,
             "signatures": sigs,
             "buckets": bucketed,
             "pairs": cand,

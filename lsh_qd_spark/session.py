@@ -59,20 +59,17 @@ def get_spark(
         # 3M-page dedup job it converts all 8 verify-stage SortMergeJoins
         # to ShuffledHashJoins and drops the plan's Sort nodes 18 → 2
         # (the two text-fetch joins stop sorting ~1M candidate texts
-        # per side). Env-overridable for bigger-executor deployments.
+        # per side). Bigger-executor deployments override it through
+        # RuntimeConfig.extra_confs, like any other conf.
         .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64m"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
         )
         # zstd shuffle/spill compression (guide §2.3): measured −36%
         # shuffle bytes written on the 3M-page dedup job (1926 → 1237 MB,
         # the text-heavy verify shuffles compress far better than lz4) at
         # no measurable CPU cost; at cluster scale shuffle bytes are
-        # network, so the ratio is the win. Env-overridable.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"),
-        )
+        # network, so the ratio is the win.
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(

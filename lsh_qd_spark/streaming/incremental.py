@@ -65,8 +65,9 @@ from lsh_qd_spark.io import (
 )
 from lsh_qd_spark.operators.cluster import connected_components
 from lsh_qd_spark.operators.pairs import (
-    BIG_KEY_BROADCAST_CAP,
+    bounded_broadcast,
     counted_plus_stars,
+    split_oversized_buckets,
 )
 from lsh_qd_spark.operators.verify import verify_pairs_text
 from lsh_qd_spark.plans.pipeline import DedupPipeline
@@ -201,16 +202,9 @@ class IncrementalDedup:
             # the matching shards. Broadcast fits the streaming regime
             # (micro-batches small vs the index) — but maxFilesPerTrigger
             # bounds FILES, not rows: a backfill with GB-sized source files
-            # yields millions of docs × num_bands distinct keys, and a
-            # forced broadcast (hint bypasses autoBroadcastJoinThreshold)
-            # would OOM the driver. Same counted-cap + shuffle-fallback
-            # contract as the big-key path in operators/pairs.py; the
-            # count is cheap (buckets is persisted).
-            batch_keys = probe.select(*keys).distinct().localCheckpoint(
-                eager=True
-            )
-            if batch_keys.count() <= BIG_KEY_BROADCAST_CAP:
-                batch_keys = F.broadcast(batch_keys)
+            # yields millions of docs × num_bands distinct keys, so the key
+            # set goes through the size gate (cheap: buckets is persisted).
+            batch_keys, _ = bounded_broadcast(probe.select(*keys).distinct())
             index = index.join(batch_keys, keys, "left_semi")
             build = index.unionByName(build)
         # Mega-bucket cap (batch-path parity, operators/pairs.py): a
@@ -224,46 +218,28 @@ class IncrementalDedup:
         # Eager localCheckpoint: build feeds the size aggregation AND the
         # hits join — without it the pruned index scan runs twice.
         build = build.localCheckpoint(eager=True)
-        sizes = build.groupBy(*keys).agg(
-            F.count("*").alias("bucket_n"),
-            F.min(
-                F.when(F.col("from_index"), F.col("existing_doc"))
-            ).alias("rep_idx"),
-            F.min("existing_doc").alias("rep_any"),
+        small_build, big = split_oversized_buckets(
+            build,
+            keys,
+            F.coalesce(
+                F.min(F.when(F.col("from_index"), F.col("existing_doc"))),
+                F.min("existing_doc"),
+            ),
+            self.config.max_bucket_size,
         )
-        big = sizes.where(
-            F.col("bucket_n") > self.config.max_bucket_size
-        ).select(*keys, F.coalesce("rep_idx", "rep_any").alias("rep"))
-        big_ck = big.localCheckpoint(eager=True)
-        n_big = big_ck.count()
-        if n_big:
-            # same no-silent-truncation contract as candidate_pairs: over
-            # the broadcast budget the splits run as shuffle joins
-            big_df = (
-                F.broadcast(big_ck)
-                if n_big <= BIG_KEY_BROADCAST_CAP
-                else big_ck
-            )
-            small_build = build.join(big_df.select(*keys), keys, "left_anti")
-            star_hits = (
-                probe.join(big_df, keys)
+        # (id_a, id_b) = (new_doc, existing_doc) through the shared
+        # counted/star tail — an orientation, not the canonical id_a < id_b
+        stars = None
+        if big is not None:
+            stars = (
+                probe.join(big, keys)
                 .where(F.col("doc_id") != F.col("rep"))
                 .select(
-                    F.col("doc_id").alias("new_doc"),
-                    F.col("rep").alias("existing_doc"),
+                    F.col("doc_id").alias("id_a"), F.col("rep").alias("id_b")
                 )
                 .distinct()
-                .select(
-                    "new_doc",
-                    "existing_doc",
-                    F.lit(0).cast("long").alias("n_bands"),
-                    F.lit(True).alias("via_star"),
-                )
             )
-        else:
-            small_build = build
-            star_hits = None
-        hits = (
+        counted = (
             probe.join(small_build, keys)
             # vs index: any orientation; intra-batch: canonical order only
             .where(
@@ -278,25 +254,20 @@ class IncrementalDedup:
             # which would double-count n_bands and let sub-alpha pairs
             # through. Per-band dedup restores the alpha semantics.
             .dropDuplicates(["doc_id", "existing_doc", "band_idx"])
-            .groupBy(F.col("doc_id").alias("new_doc"), F.col("existing_doc"))
+            .groupBy(
+                F.col("doc_id").alias("id_a"),
+                F.col("existing_doc").alias("id_b"),
+            )
             .agg(F.count("*").alias("n_bands"))
             .where(F.col("n_bands") >= self.config.alpha)
-            .withColumn("via_star", F.lit(False))
         )
-        if star_hits is not None:
-            # a pair can be both counted (small buckets) and starred (a
-            # mega bucket in another band) in one epoch — keep the counted
-            # row only. Eager checkpoint so the anti-join's second read of
-            # the counted pairs does not re-run the hits chain (the
-            # measured double-execution hazard operators/pairs.py pins).
-            hits = hits.localCheckpoint(eager=True)
-            star_hits = star_hits.join(
-                hits.select("new_doc", "existing_doc"),
-                ["new_doc", "existing_doc"],
-                "left_anti",
-            )
-            hits = hits.unionByName(star_hits)
-        hits = hits.withColumn("epoch", F.lit(epoch_id))
+        hits = counted_plus_stars(counted, stars).select(
+            F.col("id_a").alias("new_doc"),
+            F.col("id_b").alias("existing_doc"),
+            "n_bands",
+            "via_star",
+            F.lit(epoch_id).alias("epoch"),
+        )
         # epoch-partitioned dynamic overwrite on BOTH sinks → a replayed
         # epoch rewrites its own partitions, never double-appends.
         write_stage(hits, self.hits_dir, "dynamic_overwrite", ["epoch"])

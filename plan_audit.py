@@ -177,9 +177,10 @@ def main() -> None:
         "  regexp chain — it runs at scan speed at 100 TB).",
         "- `decontam_overlap` must reach the gram join via a BROADCAST of the",
         "  eval-set grams (broadcasts ≥ 1): the training corpus is never",
-        "  shuffled for the membership probe. Its two exchanges are the",
-        "  eval-side distinct (bounded by the benchmark suite's size) and",
-        "  the final per-doc partial-agg groupBy.",
+        "  shuffled for the membership probe. Its one exchange is the final",
+        "  per-doc partial-agg groupBy; the eval-side distinct runs in the",
+        "  size gate's count job (`pairs.bounded_broadcast`), so the plan",
+        "  reads the checkpointed gram set (`Scan ExistingRDD`).",
         "- `repetition_scores` must be a 0-shuffle, 0-python narrow map (the",
         "  top-gram count is a sorted-array run-length aggregate inside the",
         "  projection — the Gopher filter family runs at scan speed).",

@@ -20,6 +20,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def no_auto_broadcast(spark):
+    """Size-based auto-broadcast off for one test, so only an explicit
+    broadcast hint (a size gate's) can put a BroadcastExchange in a plan."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)
+
+
 TESTDATA = "/root/testdata"
 
 

@@ -37,6 +37,35 @@ def test_planted_boilerplate_removed(spark):
     assert out[9]["text"] == " ".join(f"solo{i}" for i in range(23))
 
 
+def test_shuffle_fallback_matches_broadcast(
+    spark, monkeypatch, no_auto_broadcast
+):
+    """Over the size gate's cap (forced here by lowering it to 0) the
+    flagged windows are anti-joined by shuffle, never by broadcast, and
+    the cleaned corpus is the same as on the broadcast path."""
+    from lsh_qd_spark.operators import pairs
+
+    footer = " ".join(f"foot{i}" for i in range(10))
+    rows = [
+        (d, f"{footer} " + " ".join(f"u{d}w{i}" for i in range(12)))
+        for d in range(5)
+    ]
+    docs = _mk(spark, rows)
+
+    def cleaned_and_plan():
+        out = remove_boilerplate(docs, seg_len=10, df_threshold=3)
+        got = sorted(tuple(r) for r in out.collect())
+        return got, out._jdf.queryExecution().executedPlan().toString()
+
+    got_b, plan_b = cleaned_and_plan()
+    monkeypatch.setattr(pairs, "BIG_KEY_BROADCAST_CAP", 0)
+    got_s, plan_s = cleaned_and_plan()
+    assert "BroadcastHashJoin" in plan_b
+    assert "Broadcast" not in plan_s
+    assert got_b == got_s
+    assert all(r[2] == 1 and "foot0" not in r[1] for r in got_s)
+
+
 def test_below_threshold_untouched_and_order_preserved(spark):
     shared = " ".join(f"s{i}" for i in range(10))
     # only 2 docs share the window — below df_threshold=3 → kept, and

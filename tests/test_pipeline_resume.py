@@ -204,33 +204,6 @@ def test_include_singletons_in_clusters_identity(spark, docs, tmp_path):
     assert again == no_single
 
 
-def test_candidate_shingles_is_lazy(spark):
-    """candidate_shingles must launch NO jobs at construction time: the
-    fused-path run() builds it for every caller, and most (e.g. the CLI)
-    never consume the shingles output. Proven with a pair source that
-    throws on execution — construction succeeds, consumption raises."""
-    import pytest
-
-    from lsh_qd_spark.config import DedupConfig
-    from lsh_qd_spark.plans.pipeline import DedupPipeline
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta")], "doc_id long, text string"
-    )
-
-    def boom(batches):
-        raise RuntimeError("executed a supposedly-lazy plan")
-        yield  # pragma: no cover
-
-    failing_pairs = docs.mapInPandas(
-        boom, schema="id_a long, id_b long, n_bands long"
-    )
-    pipe = DedupPipeline(DedupConfig())
-    sh = pipe.candidate_shingles(docs, failing_pairs)  # must not raise
-    with pytest.raises(Exception, match="supposedly-lazy"):
-        sh.count()
-
-
 @pytest.mark.parametrize("shingle_hash", ["poly", "xxhash64"])
 def test_run_rejects_non_fast_shingle_hash(docs, shingle_hash):
     """run() has one path, the fused kernel; any other shingle hash is

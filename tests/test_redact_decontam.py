@@ -139,20 +139,27 @@ def test_redact_docs_rerun_safe(spark):
     assert row["extra"] == "keep"
 
 
-def test_remove_contaminated_shuffle_fallback(spark):
-    """broadcast_flagged=False (the unbounded-flagged-set escape hatch)
-    must produce the same corpus as the broadcast path."""
+def test_remove_contaminated_shuffle_fallback(
+    spark, monkeypatch, no_auto_broadcast
+):
+    """Over the size gate's cap (forced here by lowering it to 0) the eval
+    grams and the flagged ids join by shuffle, never by broadcast, and the
+    corpus is the same as on the broadcast path."""
+    from lsh_qd_spark.operators import pairs
+
     tr = spark.createDataFrame(TRAIN, "doc_id long, text string")
     ev = spark.createDataFrame(EVAL, "doc_id long, text string")
-    kept_b = sorted(
-        r["doc_id"] for r in remove_contaminated(tr, ev, k=3).collect()
-    )
-    kept_s = sorted(
-        r["doc_id"]
-        for r in remove_contaminated(
-            tr, ev, k=3, broadcast_flagged=False
-        ).collect()
-    )
+
+    def kept_and_plan():
+        out = remove_contaminated(tr, ev, k=3)
+        kept = sorted(r["doc_id"] for r in out.collect())
+        return kept, out._jdf.queryExecution().executedPlan().toString()
+
+    kept_b, plan_b = kept_and_plan()
+    monkeypatch.setattr(pairs, "BIG_KEY_BROADCAST_CAP", 0)
+    kept_s, plan_s = kept_and_plan()
+    assert "BroadcastHashJoin" in plan_b
+    assert "Broadcast" not in plan_s
     assert kept_b == kept_s == [2]
 
 

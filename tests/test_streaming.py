@@ -246,6 +246,33 @@ def test_mega_bucket_emits_stars_not_quadratic(spark, tmp_path):
     assert comp == {0} and labels.count() == n
 
 
+def test_stream_star_rep_prefers_indexed_doc(spark, tmp_path):
+    """When a later epoch brings the bucket's global minimum, the star
+    representative must still be the smallest INDEXED member: epoch 0
+    indexes docs 200-399 of one boilerplate text, epoch 1 brings docs
+    0-199. A plain min() rep (doc 0) would star the new docs onto each
+    other and leave them disconnected from the indexed 200-399."""
+    from lsh_qd_spark.operators.cluster import connected_components
+
+    work = str(tmp_path / "work")
+    docs = spark.createDataFrame(
+        [(i, "the same boilerplate navigation chrome text " * 5)
+         for i in range(400)],
+        "doc_id long, text string",
+    )
+    inc = IncrementalDedup(
+        DedupConfig(rows_per_band=2, num_bands=8, alpha=1, max_bucket_size=50),
+        work,
+    )
+    inc.process_batch(docs.where(F.col("doc_id") >= 200), epoch_id=0)
+    inc.process_batch(docs.where(F.col("doc_id") < 200), epoch_id=1)
+    labels = connected_components(
+        inc.pairs(spark).select("id_a", "id_b"), driver_edge_threshold=0
+    )
+    comp = [r["cluster_id"] for r in labels.collect()]
+    assert len(comp) == 400 and set(comp) == {0}
+
+
 def test_start_forwards_reader_options(spark, tmp_path):
     """Extra read options must reach the stream reader: a pathGlobFilter
     that matches nothing processes zero files (silently dropped options
